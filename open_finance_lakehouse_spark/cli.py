@@ -125,13 +125,8 @@ def main(argv=None):
         if name == "cluster":
             p.add_argument("--curve", default=None,
                            choices=["zorder", "hilbert"])
-            p.add_argument("--mode", default=None,
-                           choices=["global", "per-partition"])
         if name in ("expire", "pipeline"):
             p.add_argument("--retain-last", type=int, default=None)
-        if name == "pipeline":
-            p.add_argument("--cluster-mode", default=None,
-                           choices=["global", "per-partition"])
 
     dl = sub.add_parser("delete",
                         help="predicate DELETE: stats-pruned three-tier "
@@ -504,11 +499,9 @@ def _execute(spark, args) -> dict:
                           concurrency=cfg["concurrency"])
         elif args.cmd == "cluster":
             from open_finance_lakehouse_spark.operators.cluster import (
-                cluster,
                 cluster_global,
             )
 
-            mode = args.mode or cfg["cluster_mode"]
             curve = args.curve if args.curve else cfg["curve"]
             if curve is None:
                 # the table DECLARED curve=none; only an explicit --curve
@@ -518,18 +511,8 @@ def _execute(spark, args) -> dict:
                        "reason": "table declares maintenance.curve=none "
                                  "(pass --curve to override)"}
             else:
-                # declared maintenance.* knobs apply here too — the
-                # flags > declared-config > defaults precedence must not
-                # diverge between the CLI lane and run_maintenance
-                if mode == "global":
-                    out = cluster_global(
-                        t, ledger, job_id, curve=curve,
-                        target_bytes=target,
-                        exchange=cfg["cluster_exchange"])
-                else:
-                    out = cluster(t, ledger, job_id, curve=curve,
-                                  target_bytes=target,
-                                  concurrency=cfg["concurrency"])
+                out = cluster_global(t, ledger, job_id, curve=curve,
+                                     target_bytes=target)
         elif args.cmd == "expire":
             from open_finance_lakehouse_spark.operators.expire import expire
 
@@ -577,8 +560,6 @@ def _execute(spark, args) -> dict:
                 kw["target_bytes"] = target
             if args.retain_last is not None:
                 kw["retain_last"] = args.retain_last
-            if args.cluster_mode is not None:
-                kw["cluster_mode"] = args.cluster_mode
             out = run_maintenance(t, ledger, job_id=args.job_id, **kw)
     return out
 

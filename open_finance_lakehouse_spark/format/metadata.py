@@ -248,7 +248,11 @@ def read_current_metadata(location: str) -> TableMetadata:
             os.unlink(path)
         except OSError:
             pass  # a concurrent reader already recovered it
-        return read_current_metadata(location)
+        # recurse only once the corpse is gone: an unlink that keeps
+        # failing (permissions, read-only mount) must surface as the
+        # unreadable-head error, not as unbounded recursion
+        if not os.path.exists(path):
+            return read_current_metadata(location)
     raise ValueError(f"unreadable table metadata document: {path}")
 
 

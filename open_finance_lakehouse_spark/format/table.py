@@ -515,52 +515,6 @@ class LakeTable:
         shutil.rmtree(staging, ignore_errors=True)
         return entries
 
-    def stage_indexed(
-        self,
-        df: DataFrame,
-        partition_of_task: list[str],
-        max_records_per_file: int | None = None,
-    ) -> list[mf.DataFile]:
-        """Stage a frame whose TASK INDEX determines the partition: task
-        ``i``'s output files belong to ``partition_of_task[i]``.
-
-        Used by exchange-free clustering: the frame is a union of
-        per-partition single-task branches, written PLAIN (no
-        ``partitionBy``), so (a) the writer inserts no sort — the branch's
-        clustering order survives byte-for-byte — and (b) there is exactly
-        ONE Spark job for the whole table. Output file names carry the
-        task index (``part-00007-…``), which maps back to the table
-        partition."""
-        import re
-
-        staging = os.path.join(self.location, "_staging", uuid.uuid4().hex)
-        try:
-            writer = df.write.mode("overwrite")
-            if max_records_per_file:
-                writer = writer.option("maxRecordsPerFile",
-                                       str(max_records_per_file))
-            writer.parquet(staging)
-            entries: list[mf.DataFile] = []
-            for n in sorted(os.listdir(staging)):
-                if not n.endswith(".parquet"):
-                    continue
-                m = re.match(r"part-(\d+)-", n)
-                if m is None:
-                    raise RuntimeError(f"unexpected staged file name {n}")
-                part = partition_of_task[int(m.group(1))]
-                part_dir = os.path.join(self.location, "data", f"part={part}")
-                os.makedirs(part_dir, exist_ok=True)
-                rel = os.path.join("data", f"part={part}",
-                                   f"{uuid.uuid4().hex}.parquet")
-                abs_dst = os.path.join(self.location, rel)
-                os.replace(os.path.join(staging, n), abs_dst)
-                entries.append(mf.collect_file_stats(abs_dst, rel, part))
-        except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)  # no leaked trees
-            raise
-        shutil.rmtree(staging, ignore_errors=True)
-        return entries
-
     # --------------------------------------------------------------- commits
 
     def _try_commit(self, build) -> md.Snapshot:
@@ -1326,8 +1280,11 @@ class LakeTable:
             md.sweep_stale_tmp(
                 self.location,
                 max_age_ms=max(grace_ms, md.DEAD_CLAIM_AGE_MS))
-            self._sweep_dead_staging(
-                max_age_ms=max(grace_ms, md.DEAD_CLAIM_AGE_MS))
+            # a _staging tree lives for a whole Spark write (minutes on a
+            # big rewrite), not a sub-second commit window: floor its age
+            # gate at the stale-tmp default so grace 0 never rmtrees a
+            # live writer's output mid-job
+            self._sweep_dead_staging(max_age_ms=max(grace_ms, 3_600_000))
         return sorted(victims)
 
     def _sweep_dead_staging(self, max_age_ms: int) -> list[str]:

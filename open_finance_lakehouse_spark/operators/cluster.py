@@ -1,35 +1,37 @@
 """Z-order / Hilbert clustering rewrite.
 
 Replaces the reference's proprietary ``OPTIMIZE ... ZORDER BY (series_id,
-date)`` (/root/reference/ofl/transform/spark/silver.py:368-371) with an
-explicit Spark plan:
+date)`` (``ofl/transform/spark/silver.py``) with one explicit whole-table
+Spark plan, ``cluster_global``:
 
-  scan partition files
+  plan: ONE grouped collect over the manifest relation — per partition,
+        its sorted path list, byte/record totals and the curve axes'
+        min/max (input fingerprint, row cap and curve bounds all derive
+        from those rows on the driver)
+  scan the planned snapshot
     → curve key via vectorized Arrow UDF (``functions.curves`` — the only
-      Python in the plan, batch-vectorized; north_rule's sanctioned escape)
-    → ``repartitionByRange(n_out, zval)`` (ONE shuffle, range-partitioned so
-      output files tile the curve)
-    → ``sortWithinPartitions(zval, clip_id)`` (deterministic tie-break —
-      SURVEY.md §7.3 determinism-under-shuffle)
-    → write one ~target-size file per range partition; footer min/max stats
-      on the clustered dimensions become tight, which is what makes
-      manifest-level file skipping selective (measured by
-      ``tests/test_maintenance.py`` before/after files-read counts).
+      Python in the plan, batch-vectorized)
+    → ``repartitionByRange(n_out, __part, __zval)`` (ONE shuffle; the
+      partition value leads, so output files never span partitions and
+      tile the curve within each)
+    → ``sortWithinPartitions(__part, __zval, clip_id)`` (deterministic
+      tie-break — SURVEY.md §7.3 determinism-under-shuffle)
+    → write ~target-size files; footer min/max stats on the clustered
+      dimensions become tight, which is what makes manifest-level file
+      skipping selective (measured by ``tests/test_maintenance.py``
+      before/after files-read counts)
+  commit: ONE atomic snapshot.
 
 The curve key is a derived column dropped before write — the table schema
-never changes; clustering is purely a physical-layout operation.
-
-Scale: bytes move exactly once through one range exchange. Range boundaries
-come from Spark's range-partition sampling, so skewed curve-key densities
-still yield balanced output files; AQE handles residual skew.
+never changes; clustering is purely a physical-layout operation. Range
+boundaries come from Spark's range-partition sampling, so skewed curve-key
+densities still yield balanced output files; AQE handles residual skew.
 """
 
 from __future__ import annotations
 
 import math
-import os
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import functions as F
 
@@ -45,69 +47,27 @@ from open_finance_lakehouse_spark.plans.ledger import (
     STATUS_REWRITING,
     CheckpointLedger,
     CheckpointRecord,
-    file_set_hash,
 )
 
 
-def observed_bounds_df(table: LakeTable, columns=("dur_ms", "sr_hz")) -> dict:
-    """Normalization bounds for the curve axes from manifest min/max stats
-    — no data scan, computed as ONE aggregate over the ``files_df``
-    manifest relation (the planning path never materializes the file
-    inventory on the driver). Normalizing to the OBSERVED range gives
-    every dimension full bit-resolution in the interleave — a fixed global
-    range would leave narrow-domain dimensions with constant high bits and
-    no sort influence. Curve axes here are long-typed; extend the
-    element_at maps for double/string axes as needed."""
-    aggs = []
-    for c in columns:
-        aggs.append(F.min(F.element_at("min_long", F.lit(c))).alias(f"lo_{c}"))
-        aggs.append(F.max(F.element_at("max_long", F.lit(c))).alias(f"hi_{c}"))
-    row = table.files_df().agg(*aggs).first()
-    out = {}
-    for c in columns:
-        lo, hi = row[f"lo_{c}"], row[f"hi_{c}"]
-        if lo is not None:
-            lo, hi = float(lo), float(hi)
-            out[c] = (lo, hi if hi > lo else lo + 1.0)
-    return out
-
-
-LINEAGE_FILE_GRAIN_MAX = 100_000
-# above this inventory size, cluster_global's lineage degrades from
-# file-grain inputs to manifest-grain — file-grain lineage inherently
-# writes the whole path list into the log, which is the one remaining
-# O(files) driver materialization and must not ride along unbounded
-
-
-def _xor_fingerprint_repr(curve: str, n: int, xored: int) -> str:
-    """Canonical text form of the order-insensitive input fingerprint:
-    (count, XOR of per-path ``xxhash64(f"{curve}:{path}")``)."""
-    return f"{curve}:{n}:{xored & 0xFFFFFFFFFFFFFFFF:016x}"
-
-
 def _xor_fingerprint_py(curve: str, paths: list[str]) -> str:
-    """Driver-side twin of the Spark aggregate fingerprint, built on the
-    numpy XXH64 kernel (bit-exact with ``F.xxhash64`` — property-tested in
-    ``tests/test_kernels.py``), so an output file set's fingerprint can be
-    compared with a later run's Spark-computed input fingerprint."""
+    """Order-insensitive fingerprint of a file set: ``curve:count:xor``,
+    the XOR of per-path ``xxhash64(f"{curve}:{path}")`` (the count hardens
+    it against the XOR's even-multiset blind spot). Built on the numpy
+    XXH64 kernel, bit-exact with Spark's
+    ``bit_xor(xxhash64(concat(lit(f"{curve}:"), file_path)))`` — so ledger
+    records written by a Spark-side fingerprint still match."""
     import numpy as np
 
     from open_finance_lakehouse_spark.functions.xxh64 import (
         xxh64_spark_column,
     )
 
-    if not paths:
-        return _xor_fingerprint_repr(curve, 0, 0)
-    h = xxh64_spark_column([f"{curve}:{p}" for p in paths], "string")
-    x = int(np.bitwise_xor.reduce(h.view(np.uint64)))
-    return _xor_fingerprint_repr(curve, len(paths), x)
-
-
-LOCAL_SORT_MAX_PARTITION_BYTES = 512 * 1024 * 1024
-# local mode pays ~0.1-0.3 s of driver plan-construction per partition
-# (32 file relations + a union); it only wins when each partition's data
-# dwarfs that fixed cost — below this, the one-job range exchange is faster
-LOCAL_MIN_BYTES_PER_PARTITION = 32 * 1024 * 1024
+    x = 0
+    if paths:
+        h = xxh64_spark_column([f"{curve}:{p}" for p in paths], "string")
+        x = int(np.bitwise_xor.reduce(h.view(np.uint64)))
+    return f"{curve}:{len(paths)}:{x & 0xFFFFFFFFFFFFFFFF:016x}"
 
 
 def cluster_global(
@@ -116,236 +76,105 @@ def cluster_global(
     job_id: str,
     curve: str = "zorder",
     target_bytes: int = binpack.DEFAULT_TARGET_FILE_BYTES,
-    exchange: str = "auto",
 ) -> dict:
     """Whole-table clustering as ONE Spark job: scan all live files → curve
     key → one range exchange on (partition, zval) → sorted write → one
     atomic commit.
 
-    This is the throughput path: fixed per-job costs (range-sampling pass,
-    stage scheduling, JIT warm-up) are paid once for the table instead of
-    once per partition, so wall time tracks bytes/cores — the property the
-    N→4N scaling target measures. Resume granularity is the whole job
-    (coarser than ``cluster``'s per-partition checkpoints); per-partition
-    stats still land in the ledger for metrics parity. Equivalent to the
-    reference's single ``OPTIMIZE ... ZORDER BY`` table-wide call
-    (/root/reference/ofl/transform/spark/silver.py:368-371).
+    Fixed per-job costs (range-sampling pass, stage scheduling, JIT
+    warm-up) are paid once for the table, so wall time tracks bytes/cores.
+    Resume granularity is the whole job; per-partition lineage still lands
+    in the ledger. Equivalent to the reference's single table-wide
+    ``OPTIMIZE ... ZORDER BY`` call.
 
-    Planning runs off ``files_df`` (the manifest relation): sizing/record
-    aggregates and the curve-axis bounds are Spark-side aggregations; the
-    driver collects only the path list — which the explicit-file parquet
-    read and the rewrite commit's removal set need anyway (scan-task
-    planning is driver work in every table format; the *arithmetic* is
-    what must never driver-materialize the inventory).
-
-    ``exchange`` picks how rows reach their sorted output file:
-
-    - ``"range"`` — one ``repartitionByRange(__part, __zval)`` exchange;
-      any partition's sort parallelizes across the cluster. Required when
-      single partitions are big (their sort must not be one task).
-    - ``"local"`` — NO exchange: each table partition's files are read by
-      ONE task which sorts locally and writes its ~target-size chunks.
-      Bytes never transit a shuffle (a clustering shuffle moves every byte
-      twice through shuffle storage), the range-sampling pass disappears,
-      and per-file stats are exactly as tight (the range mode's leading
-      key is ``__part`` anyway, so output files never span partitions in
-      either mode). Partition staging jobs run CONCURRENTLY from a driver
-      thread pool (FAIR scheduler) and publish in ONE atomic rewrite
-      commit — separate jobs rather than a union of coalesced branches
-      because Catalyst collapses Union(Coalesce(1)…) into a single-task
-      plan (measured: the union form runs the whole table on one core).
-      Parallelism = partition count — the right regime for many modest
-      partitions, which is precisely what a bucket-partitioned clip table
-      gives. Output sizing uses ONE records-per-file for the whole job,
-      taken from the widest-row partition (the min over per-partition
-      bytes/row), so no partition can exceed target_bytes; narrow-row
-      partitions emit proportionally smaller files — the safe side of
-      the trade (stage_indexed writes all branches through one writer
-      conf, so a per-partition cap isn't expressible in one job).
-    - ``"auto"`` (default) — ``local`` when every partition fits a
-      single-task sort (≤ ``LOCAL_SORT_MAX_PARTITION_BYTES`` and >1
-      partition), else ``range``."""
-    if exchange not in ("auto", "local", "range"):
-        # a typo'd mode silently falling through to the range exchange
-        # would pay the measured 1.68x shuffle tax with no clue — the
-        # registry's no-silent-fallback discipline applies to call sites
-        raise ValueError(
-            f"exchange={exchange!r}: expected 'auto', 'local', or 'range'")
+    Planning is ONE grouped collect over the manifest relation: per
+    partition, its sorted path list, byte/record totals and the curve
+    axes' min/max. The driver derives everything else from those
+    O(partitions) rows — the input fingerprint, the output row cap, the
+    curve normalization bounds and the file-grain lineage inputs."""
     # plan against the CURRENT head, not whatever snapshot this handle
     # last saw: a stale plan's removal set conflicts on commit (correct but
     # wasted work), and a retried run would re-conflict forever
     table.refresh()
-    inv = table.files_df().select(
-        "file_path", "partition", "file_size_bytes", "record_count")
-    # ONE planning job: the sizing aggregate also folds the input
-    # fingerprint (XOR is associative — per-partition xor, then xor of
-    # xors) instead of re-scanning the manifest relation per metric
-    agg = (
-        inv.groupBy("partition")
-        .agg(F.count(F.lit(1)).alias("pf"),
-             F.sum("file_size_bytes").alias("pb"),
+    bound_cols = []
+    for c in CLIP_DIM_BOUNDS:
+        bound_cols += [
+            F.min(F.element_at("min_long", F.lit(c))).alias(f"lo_{c}"),
+            F.max(F.element_at("max_long", F.lit(c))).alias(f"hi_{c}")]
+    part_rows = (
+        table.files_df().groupBy("partition")
+        .agg(F.sum("file_size_bytes").alias("pb"),
              F.sum("record_count").alias("pr"),
-             F.bit_xor(F.xxhash64(
-                 F.concat(F.lit(f"{curve}:"), F.col("file_path"))))
-             .alias("px"))
-        .agg(F.coalesce(F.sum("pf"), F.lit(0)).alias("files"),
-             F.count(F.lit(1)).alias("parts"),
-             F.coalesce(F.sum("pb"), F.lit(0)).alias("bytes"),
-             F.coalesce(F.sum("pr"), F.lit(0)).alias("records"),
-             F.coalesce(F.max("pb"), F.lit(0)).alias("max_part_bytes"),
-             F.coalesce(F.bit_xor("px"), F.lit(0)).alias("x"))
-        .first()
+             F.sort_array(F.collect_list("file_path")).alias("ps"),
+             *bound_cols)
+        .collect()
     )
+    by_part: dict[str, list[str]] = {
+        r["partition"]: list(r["ps"]) for r in part_rows}
+    paths = [p for ps in by_part.values() for p in ps]
+    bytes_in = sum(int(r["pb"]) for r in part_rows)
+    records_in = sum(int(r["pr"]) for r in part_rows)
     totals = {
         "job_id": job_id, "operation": f"cluster_global[{curve}]",
-        "partitions_planned": int(agg["parts"]),
+        "partitions_planned": len(part_rows),
         "partitions_rewritten": 0, "partitions_skipped": 0,
-        "files_in": int(agg["files"]), "files_out": 0,
-        "bytes_in": int(agg["bytes"]),
+        "files_in": len(paths), "files_out": 0, "bytes_in": bytes_in,
         "bytes_out": 0, "rows": 0, "engine_ms": 0,
     }
-    if not agg["files"]:
+    if not paths:
         return totals
-    if exchange == "auto":
-        per_part = int(agg["bytes"]) / max(1, int(agg["parts"]))
-        oversized = (int(agg["max_part_bytes"])
-                     > LOCAL_SORT_MAX_PARTITION_BYTES)
-        exchange = ("local"
-                    if (int(agg["parts"]) > 1 and not oversized
-                        and per_part >= LOCAL_MIN_BYTES_PER_PARTITION)
-                    else "range")
-        if oversized:
-            # the sf10 finding (BENCH/sf10.md): a fixed bucket count lets
-            # partitions outgrow the single-task sort bound, flipping auto
-            # to the range exchange — every byte then transits shuffle
-            # storage (measured 1.68x slower at sf10). The durable remedy
-            # is the engine's own partition-spec evolution; surface it —
-            # INCLUDING for a 1-partition table, the degenerate case that
-            # needs re-bucketing most.
-            totals["advisory"] = (
-                f"largest partition {int(agg['max_part_bytes']) >> 20} MB "
-                f"exceeds the single-task sort bound "
-                f"({LOCAL_SORT_MAX_PARTITION_BYTES >> 20} MB); auto chose "
-                "the range exchange (bytes transit shuffle storage) — "
-                "consider rewrite_partitioning to a higher bucket count")
-    totals["operation"] = f"cluster_global[{curve},{exchange}]"
     pre_snap = table.meta.snapshot()  # plan-time head (CAS guard)
     pre_snapshot = pre_snap.snapshot_id
     pre_manifests = set(pre_snap.manifests)
-    # input fingerprint: XOR of per-path xxhash64 is order-insensitive and
-    # never materializes the path list on the driver (count hardens it
-    # against the xor's even-multiset blind spot; paths within a snapshot
-    # are unique anyway) — folded into the planning aggregate above
-    fingerprint = _xor_fingerprint_repr(
-        curve, int(agg["files"]), int(agg["x"]))
+    # order-insensitive input fingerprint: a replay over the same file set
+    # (or over this job's own output) is skipped
+    fingerprint = _xor_fingerprint_py(curve, paths)
     if ledger.is_committed(job_id, "__table__", fingerprint):
         totals["partitions_skipped"] = totals["partitions_planned"]
         return totals
 
     t0 = time.monotonic()
-    bounds = {**CLIP_DIM_BOUNDS, **observed_bounds_df(table)}
-    bytes_in = totals["bytes_in"]
-    records_in = int(agg["records"])
+    # normalize each curve axis to its OBSERVED range (manifest min/max, no
+    # data scan): every dimension gets full bit-resolution in the
+    # interleave — a fixed global range would leave narrow-domain
+    # dimensions with constant high bits and no sort influence
+    bounds = dict(CLIP_DIM_BOUNDS)
+    for c in CLIP_DIM_BOUNDS:
+        los = [r[f"lo_{c}"] for r in part_rows if r[f"lo_{c}"] is not None]
+        his = [r[f"hi_{c}"] for r in part_rows if r[f"hi_{c}"] is not None]
+        if los:
+            lo, hi = float(min(los)), float(max(his))
+            bounds[c] = (lo, hi if hi > lo else lo + 1.0)
     ledger.upsert(CheckpointRecord(
         job_id=job_id, table=table.meta.name, partition_id="__table__",
         file_set_hash=fingerprint, status=STATUS_REWRITING,
         files_in=totals["files_in"], bytes_in=bytes_in,
     ))
     n_out = max(1, math.ceil(bytes_in / target_bytes))
-    # per-partition input stats as a grouped aggregate (O(partitions) rows
-    # reach the driver, never O(files)): the row cap comes from the
-    # WIDEST-row partition so no partition's files exceed target_bytes — a
-    # single table-wide average would let a partition with 2×-wide rows
-    # (codec/duration mix) emit 2×-target files while narrow partitions
-    # emit half-size ones
-    # local-mode branches and file-grain lineage both need the per-
-    # partition path lists — carry them on the SAME grouped collect
-    # instead of two more jobs over the manifest relation (range mode
-    # above the lineage bound stays O(partitions) rows, no paths)
-    need_paths = (exchange == "local"
-                  or totals["files_in"] <= LINEAGE_FILE_GRAIN_MAX)
-    agg_cols = [F.sum("file_size_bytes").alias("pb"),
-                F.sum("record_count").alias("pr")]
-    if need_paths:
-        agg_cols.append(
-            F.sort_array(F.collect_list("file_path")).alias("ps"))
-    part_stat_rows = inv.groupBy("partition").agg(*agg_cols).collect()
-    by_part: dict[str, list[str]] = (
-        {r["partition"]: list(r["ps"]) for r in part_stat_rows}
-        if need_paths else {})
+    # the row cap comes from the WIDEST-row partition so no partition's
+    # files exceed target_bytes — a single table-wide average would let a
+    # partition with 2×-wide rows (codec/duration mix) emit 2×-target
+    # files while narrow partitions emit half-size ones
     rpf = min(
         (binpack.records_per_file(int(r["pb"]), int(r["pr"]), target_bytes)
-         for r in part_stat_rows if r["pr"]),
+         for r in part_rows if r["pr"]),
         default=binpack.records_per_file(bytes_in, records_in, target_bytes),
     )
-    schema = table._empty_df().schema
-    if exchange == "local":
-        # no exchange: one task per table partition reads that partition's
-        # files, sorts locally on the curve key, writes sequential
-        # ~target-size chunks — bytes touch shuffle storage ZERO times,
-        # there is no range-sampling pass, and the whole table is ONE
-        # Spark job (a union of single-task branches). Spark 4 would
-        # normally merge equal-partition-count union children into one
-        # task (spark.sql.unionOutputPartitioning) — disabled around this
-        # job so the branches stay parallel.
-        # local mode builds one explicit-file read per partition from the
-        # path lists the planning collect already carried (SCAN-TASK
-        # PLANNING — what every format's driver does to schedule reads;
-        # local mode is only chosen when partitions are modest). The
-        # 100 TB path is "range", which plans through table.scan() and
-        # collects no path list at all.
-        spark = table.spark
-        parts_sorted = sorted(by_part)
-
-        def build_branch(part: str):
-            ppaths = [os.path.join(table.location, p)
-                      for p in sorted(by_part[part])]
-            return (
-                spark.read.schema(schema).parquet(*ppaths)
-                .coalesce(1)
-                .withColumn("__zval", curve_key_col(curve, bounds))
-                .sortWithinPartitions("__zval", "clip_id")
-                .drop("__zval")
-            )
-
-        # branch construction is driver/analysis work — parallel threads
-        # (py4j releases the GIL; Catalyst analyzes JVM-side), and the
-        # union folds as a TREE: a linear fold re-analyzes a linearly
-        # growing plan per step (O(n²) analysis — measured 10 s at 32
-        # branches), the tree is O(n log n)
-        with ThreadPoolExecutor(max_workers=8) as ex:
-            branches = list(ex.map(build_branch, parts_sorted))
-        while len(branches) > 1:
-            branches = [
-                branches[i].unionByName(branches[i + 1])
-                if i + 1 < len(branches) else branches[i]
-                for i in range(0, len(branches), 2)
-            ]
-        union_df = branches[0]
-        conf_key = "spark.sql.unionOutputPartitioning"
-        prev = spark.conf.get(conf_key, "true")
-        spark.conf.set(conf_key, "false")
-        try:
-            added = table.stage_indexed(union_df, parts_sorted,
-                                        max_records_per_file=rpf)
-        finally:
-            spark.conf.set(conf_key, prev)
-    else:
-        # the scale path: read the planned snapshot through the format's
-        # one scan seam (pinned to the plan-time head) — cluster.py itself
-        # never materializes a file list in range mode
-        df = table.scan(snapshot_id=pre_snapshot)
-        clustered = (
-            df.withColumn("__part", table.partition_value_col())
-            .withColumn("__zval", curve_key_col(curve, bounds))
-            .repartitionByRange(n_out, "__part", "__zval")
-            .sortWithinPartitions("__part", "__zval", "clip_id")
-            .drop("__zval")
-            .drop("__part")
-        )
-        added = table.stage_dataframe(
-            clustered, max_records_per_file=rpf,
-            repartition_by_partition=False)
+    # read the planned snapshot through the format's one scan seam (pinned
+    # to the plan-time head); __part leads the range key, so output files
+    # never span table partitions
+    clustered = (
+        table.scan(snapshot_id=pre_snapshot)
+        .withColumn("__part", table.partition_value_col())
+        .withColumn("__zval", curve_key_col(curve, bounds))
+        .repartitionByRange(n_out, "__part", "__zval")
+        .sortWithinPartitions("__part", "__zval", "clip_id")
+        .drop("__zval")
+        .drop("__part")
+    )
+    added = table.stage_dataframe(
+        clustered, max_records_per_file=rpf,
+        repartition_by_partition=False)
     # fast path: conditional replace — the rewrite covers every live file,
     # so "head unchanged since planning" proves the removal set at O(1)
     # metadata cost (no manifest re-read at any inventory size). If a
@@ -357,9 +186,7 @@ def cluster_global(
     # never enumerates file paths) and PRESERVE the concurrent append's
     # manifests. operation="cluster" keeps the snapshot skippable by
     # incremental consumers on either path.
-    from open_finance_lakehouse_spark.format.table import CommitConflict
-
-    cluster_summary = {"job_id": job_id, "curve": curve, "mode": "global"}
+    cluster_summary = {"job_id": job_id, "curve": curve}
     try:
         snap = table.commit_replace(
             added, operation="cluster",
@@ -373,7 +200,7 @@ def cluster_global(
         except CommitConflict:
             # a concurrent REWRITE (compact/MERGE/DML) replaced a planned
             # manifest, so neither commit path can prove the removal set.
-            # Surrender like compact()/cluster() do: discard the staged
+            # Surrender like compact() does: discard the staged
             # whole-table copy (else it sits orphaned until GC grace),
             # record the conflict, and return — a replay replans against
             # the new head (the ledger only skips STATUS_COMMITTED).
@@ -396,17 +223,11 @@ def cluster_global(
     for a in added:
         by_out.setdefault(a.partition, []).append(a)
     # lineage inputs are the PARTITION's own files — rows never cross
-    # partitions (both exchange modes key on __part), and whole-table
+    # partitions (the range key leads with __part), and whole-table
     # inputs would make the log O(partitions × files) and provenance
-    # queries useless. File-grain lineage inherently materializes the
-    # path list (it gets WRITTEN to the log), so above the bound the log
-    # degrades to manifest-grain inputs instead of OOMing the driver.
-    part_inputs = (by_part
-                   if totals["files_in"] <= LINEAGE_FILE_GRAIN_MAX else {})
-    manifest_inputs = sorted(pre_manifests)
+    # queries useless
     for part, outs in sorted(by_out.items()):
-        ledger.append_lineage(job_id, f"part={part}",
-                              part_inputs.get(part, manifest_inputs),
+        ledger.append_lineage(job_id, f"part={part}", by_part.get(part, []),
                               [a.file_path for a in outs], "cluster")
     ledger.upsert(CheckpointRecord(
         job_id=job_id, table=table.meta.name, partition_id="__table__",
@@ -415,9 +236,8 @@ def cluster_global(
         bytes_in=bytes_in, bytes_out=sum(a.file_size_bytes for a in added),
         files_in=totals["files_in"], files_out=len(added),
         engine_ms=engine_ms, committed_snapshot_id=snap.snapshot_id,
-        # driver twin of the Spark-side input fingerprint (the numpy
-        # XXH64 is bit-exact with F.xxhash64): a re-run whose input IS
-        # this output set is recognized as already-clustered
+        # a re-run whose input IS this output set is recognized as
+        # already-clustered
         output_file_set_hash=_xor_fingerprint_py(
             curve, [a.file_path for a in added]),
     ))
@@ -428,152 +248,6 @@ def cluster_global(
         rows=sum(a.record_count for a in added),
         engine_ms=engine_ms,
     )
-    return totals
-
-
-def cluster(
-    table: LakeTable,
-    ledger: CheckpointLedger,
-    job_id: str,
-    curve: str = "zorder",
-    target_bytes: int = binpack.DEFAULT_TARGET_FILE_BYTES,
-    concurrency: int = 8,
-) -> dict:
-    """Rewrite every partition sorted by the space-filling-curve key.
-
-    Planning runs off ``files_df`` Spark-side: the per-partition work
-    lists are GROUPED AGGREGATES over the manifest relation — one
-    O(partitions) driver collect (each row carries its partition's sorted
-    path list + size/record totals), the same discipline as
-    ``merge_plan_df`` — never a per-file driver materialization."""
-    table.refresh()  # plan against the current head (see cluster_global)
-    by_part: dict[str, dict] = {
-        r["partition"]: r.asDict()
-        for r in (
-            table.files_df()
-            .groupBy("partition")
-            .agg(F.sort_array(F.collect_set("file_path")).alias("files"),
-                 F.sum("file_size_bytes").alias("bytes_in"),
-                 F.sum("record_count").alias("records_in"))
-            .collect()
-        )
-    }
-    bounds = {**CLIP_DIM_BOUNDS, **observed_bounds_df(table)}
-
-    totals = {
-        "job_id": job_id,
-        "operation": f"cluster[{curve}]",
-        "partitions_planned": len(by_part),
-        "partitions_rewritten": 0,
-        "partitions_skipped": 0,
-        "partitions_conflicted": 0,
-        "files_in": 0,
-        "files_out": 0,
-        "bytes_in": 0,
-        "bytes_out": 0,
-        "rows": 0,
-        "engine_ms": 0,
-    }
-    if not by_part:
-        return totals
-
-    def work(part):
-        p = by_part[part]
-        paths_rel = list(p["files"])
-        fingerprint = file_set_hash([f"{curve}:{x}" for x in paths_rel])
-        part_id = f"part={part}"
-        if ledger.is_committed(job_id, part_id, fingerprint):
-            return None
-
-        t0 = time.monotonic()
-        bytes_in = int(p["bytes_in"])
-        records_in = int(p["records_in"])
-        ledger.upsert(CheckpointRecord(
-            job_id=job_id, table=table.meta.name, partition_id=part_id,
-            file_set_hash=fingerprint, status=STATUS_REWRITING,
-            files_in=len(paths_rel), bytes_in=bytes_in,
-        ))
-
-        paths = [os.path.join(table.location, p) for p in paths_rel]
-        df = table.spark.read.schema(table._empty_df().schema).parquet(*paths)
-        n_out = max(1, math.ceil(bytes_in / target_bytes))
-        rpf = binpack.records_per_file(bytes_in, records_in, target_bytes)
-        clustered = (
-            df.withColumn("__zval", curve_key_col(curve, bounds))
-            .repartitionByRange(n_out, "__zval")
-            .sortWithinPartitions("__zval", "clip_id")
-            .drop("__zval")
-        )
-        # fixed_partition: plain write (no dynamic partitioning) — besides
-        # being cheaper, it guarantees the writer inserts NO sort of its
-        # own, so the __zval ordering lands in the files byte-for-byte
-        added = table.stage_dataframe(
-            clustered,
-            max_records_per_file=rpf,
-            repartition_by_partition=False,
-            fixed_partition=part,
-        )
-        try:
-            snap = table.commit_rewrite(
-                set(paths_rel), added, operation="cluster",
-                summary={"job_id": job_id, "curve": curve,
-                         "partition": part},
-            )
-        except CommitConflict:
-            # concurrent writer took a planned file out of the live set
-            # between planning and commit — surrender this partition
-            # (discard staged output, record, keep other partitions'
-            # progress); the next run replans it against the new head
-            # (operators.compact discipline)
-            table._discard_staged(added, [])
-            ledger.upsert(CheckpointRecord(
-                job_id=job_id, table=table.meta.name, partition_id=part_id,
-                file_set_hash=fingerprint, status=STATUS_CONFLICTED,
-                files_in=len(paths_rel), bytes_in=bytes_in,
-            ))
-            return {"conflicted": True}
-        engine_ms = int((time.monotonic() - t0) * 1000)
-
-        ledger.append_lineage(job_id, part_id, paths_rel,
-                              [a.file_path for a in added], "cluster")
-        ledger.upsert(CheckpointRecord(
-            job_id=job_id, table=table.meta.name, partition_id=part_id,
-            file_set_hash=fingerprint, status=STATUS_COMMITTED,
-            rows=sum(a.record_count for a in added),
-            bytes_in=bytes_in,
-            bytes_out=sum(a.file_size_bytes for a in added),
-            files_in=len(paths_rel), files_out=len(added),
-            engine_ms=engine_ms, committed_snapshot_id=snap.snapshot_id,
-            # output fingerprint: a re-run whose input IS this output is a
-            # no-op (the partition is already clustered on this curve)
-            output_file_set_hash=file_set_hash(
-                [f"{curve}:{a.file_path}" for a in added]),
-        ))
-        return {
-            "files_in": len(paths_rel), "files_out": len(added),
-            "bytes_in": bytes_in,
-            "bytes_out": sum(a.file_size_bytes for a in added),
-            "rows": sum(a.record_count for a in added),
-        }
-
-    # concurrent partition rewrites: parallel staging, serialized commits
-    # (same rationale as operators.compact — keep the cluster busy when
-    # individual partitions are small); engine_ms = execute-phase wall time
-    t0 = time.monotonic()
-    with ThreadPoolExecutor(
-            max_workers=min(concurrency, len(by_part))) as ex:
-        results = list(ex.map(work, sorted(by_part)))
-    totals["engine_ms"] = int((time.monotonic() - t0) * 1000)
-    for res in results:
-        if res is None:
-            totals["partitions_skipped"] += 1
-            continue
-        if res.get("conflicted"):
-            totals["partitions_conflicted"] += 1
-            continue
-        totals["partitions_rewritten"] += 1
-        for k, v in res.items():
-            totals[k] += v
     return totals
 
 

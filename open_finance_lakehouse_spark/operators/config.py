@@ -26,8 +26,6 @@ MAINTENANCE_DEFAULTS: dict = {
     "curve": "zorder",          # zorder | hilbert | none
     "retain_last": 1,
     "gc_grace_ms": None,        # None -> operator default grace
-    "cluster_mode": "global",   # global | per-partition
-    "cluster_exchange": "auto",
     "concurrency": 8,
     "snr_gate": "off",          # off | serial | overlap
     "parity_gate": False,

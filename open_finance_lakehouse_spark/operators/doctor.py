@@ -42,8 +42,7 @@ def doctor(
     small_threshold = int(target_bytes * binpack.DEFAULT_SMALL_FILE_RATIO)
 
     # one distributed aggregate over the manifest relation
-    inv = table.files_df()
-    agg = inv.agg(
+    agg = table.files_df().agg(
         F.count("*").alias("files"),
         F.sum("file_size_bytes").alias("bytes"),
         F.sum("record_count").alias("rows"),
@@ -68,15 +67,6 @@ def doctor(
                     if s.snapshot_id not in chain
                     and s.summary.get("staged") != "true"]
 
-    # per-partition payload sizes: the sf10 record (BENCH/sf10.md) measured
-    # clustering 1.68x slower when the largest partition crossed the
-    # local-sort cap and auto routed to the range exchange — a mis-sized
-    # bucket count is a table defect the doctor must call out before the
-    # user pays the shuffle tax on every maintenance run
-    pmax = (inv.groupBy("partition")
-               .agg(F.sum("file_size_bytes").alias("b"))
-               .agg(F.max("b").alias("m")).first()["m"]) if files else 0
-
     signals = {
         "table": meta.name,
         "files": files,
@@ -91,7 +81,6 @@ def doctor(
         "snapshots_off_ancestry": len(off_ancestry),
         "staged_pending": staged_pending,
         "partition_spec": meta.partition_spec,
-        "max_partition_mb": round((pmax or 0) / 1048576, 2),
         "engine_ms": None,  # filled at the end
     }
     if cluster_column:
@@ -123,36 +112,6 @@ def doctor(
             f"audit: {len(staged_pending)} staged snapshot(s) pending "
             f"publish/drop: {staged_pending} — they pin files until "
             "decided")
-    if meta.partition_spec is not None:
-        # read the cap at call time so deployments (and tests) that tune
-        # cluster.LOCAL_SORT_MAX_PARTITION_BYTES see consistent advice
-        # (importlib: the package re-exports a `cluster` FUNCTION, which
-        # shadows the module under `from ... import cluster`)
-        import importlib
-
-        _cl = importlib.import_module(
-            "open_finance_lakehouse_spark.operators.cluster")
-
-        cap = _cl.LOCAL_SORT_MAX_PARTITION_BYTES
-        if pmax and pmax > cap:
-            import math
-
-            total = int(agg["bytes"] or 0)
-            # size buckets at ~half the cap so clustering stays on the
-            # exchange-free local-sort path with headroom for growth
-            want = max(1, math.ceil(total / (cap // 2)))
-            suggested = 1 << (want - 1).bit_length()  # next power of two
-            cur_n = int(meta.partition_spec.get("num_buckets", 0))
-            if suggested <= cur_n:
-                suggested = cur_n * 2
-            advice.append(
-                f"re-bucket: largest partition is "
-                f"{signals['max_partition_mb']} MB, over the local-sort "
-                f"cap ({cap >> 20} MB) — clustering auto-routes to the "
-                "range exchange (every byte transits shuffle storage; "
-                "measured 1.68x slower at sf10) — run "
-                f"`rewrite-partitioning` to ~{suggested} buckets "
-                f"(~{cap >> 21} MB/partition)")
     if meta.partition_spec is None and files > 64:
         advice.append(
             "partitioning: table is unpartitioned — bucket-partitioning "

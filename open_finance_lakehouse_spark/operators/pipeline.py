@@ -36,10 +36,7 @@ from pyspark.sql import functions as F
 
 from open_finance_lakehouse_spark.format.table import LakeTable
 from open_finance_lakehouse_spark.operators import audit as audit_ops
-from open_finance_lakehouse_spark.operators.cluster import (
-    cluster,
-    cluster_global,
-)
+from open_finance_lakehouse_spark.operators.cluster import cluster_global
 from open_finance_lakehouse_spark.operators.compact import compact
 from open_finance_lakehouse_spark.operators.expire import expire
 from open_finance_lakehouse_spark.plans.ledger import CheckpointLedger
@@ -60,11 +57,9 @@ def run_maintenance(
     spark_for_audit: SparkSession | None = None,
     subsume_compaction: bool = True,
     concurrency=_UNSET,
-    cluster_mode=_UNSET,
     gc_grace_ms=_UNSET,
     snr_gate=_UNSET,
     parity_gate=_UNSET,
-    cluster_exchange=_UNSET,
 ) -> dict:
     """compact → cluster → (SNR/parity gates) → expire; returns run metrics
     + (optionally) an independently-read table audit.
@@ -101,12 +96,9 @@ def run_maintenance(
     curve = cfg["curve"] if curve is _UNSET else curve
     retain_last = cfg["retain_last"] if retain_last is _UNSET else retain_last
     concurrency = cfg["concurrency"] if concurrency is _UNSET else concurrency
-    cluster_mode = cfg["cluster_mode"] if cluster_mode is _UNSET else cluster_mode
     gc_grace_ms = cfg["gc_grace_ms"] if gc_grace_ms is _UNSET else gc_grace_ms
     snr_gate = cfg["snr_gate"] if snr_gate is _UNSET else snr_gate
     parity_gate = cfg["parity_gate"] if parity_gate is _UNSET else parity_gate
-    cluster_exchange = (cfg["cluster_exchange"] if cluster_exchange is _UNSET
-                        else cluster_exchange)
 
     # mode knobs refuse unknown values LOUDLY (the engine-wide
     # no-silent-fallback discipline): a typo'd snr_gate would silently
@@ -115,10 +107,6 @@ def run_maintenance(
         raise ValueError(
             f"snr_gate={snr_gate!r}: expected 'off', 'overlap', or "
             "'serial'")
-    if cluster_mode not in ("global", "per-partition", "partition"):
-        raise ValueError(
-            f"cluster_mode={cluster_mode!r}: expected 'global' or "
-            "'per-partition'")
 
     job_id = job_id or f"maint-{uuid.uuid4().hex[:12]}"
     # one Spark aggregate over the manifest relation — live_files() would
@@ -153,17 +141,9 @@ def run_maintenance(
             table, ledger, f"{job_id}/compact", target_bytes=target_bytes,
             concurrency=concurrency)
     if curve is not None:
-        if cluster_mode == "global":
-            # one table-wide job: lowest overhead, core-bound scaling;
-            # per-partition mode trades throughput for file-granularity
-            # resume (pick it for very large tables / flaky clusters)
-            stages["cluster"] = cluster_global(
-                table, ledger, f"{job_id}/cluster", curve=curve,
-                target_bytes=target_bytes, exchange=cluster_exchange)
-        else:
-            stages["cluster"] = cluster(
-                table, ledger, f"{job_id}/cluster", curve=curve,
-                target_bytes=target_bytes, concurrency=concurrency)
+        stages["cluster"] = cluster_global(
+            table, ledger, f"{job_id}/cluster", curve=curve,
+            target_bytes=target_bytes)
 
     if snr_gate == "serial":
         run_snr_audit()

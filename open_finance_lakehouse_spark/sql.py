@@ -945,9 +945,7 @@ def _split_types(s: str) -> list[str]:
 #: silently riding along until some maintenance job trips over it
 _PROP_ENUMS = {
     "maintenance.curve": {"zorder", "hilbert", "none"},
-    "maintenance.cluster_mode": {"global", "per-partition"},
     "maintenance.snr_gate": {"off", "serial", "overlap"},
-    "maintenance.cluster_exchange": {"auto", "local", "range"},
 }
 
 
@@ -1649,8 +1647,7 @@ def run_maintenance_sql(
         )
 
         return cluster_global(table, ledger, jid, curve="zorder",
-                              target_bytes=cfg["target_bytes"],
-                              exchange=cfg["cluster_exchange"])
+                              target_bytes=cfg["target_bytes"])
 
     m = re.fullmatch(
         rf"vacuum\s+({_IDENT})"

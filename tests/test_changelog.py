@@ -19,7 +19,7 @@ from open_finance_lakehouse_spark.operators.changelog import (
     changes_summary,
     table_changes,
 )
-from open_finance_lakehouse_spark.operators.cluster import cluster
+from open_finance_lakehouse_spark.operators.cluster import cluster_global
 from open_finance_lakehouse_spark.operators.compact import compact
 from open_finance_lakehouse_spark.operators.merge_into import merge_into
 from open_finance_lakehouse_spark.plans.ledger import CheckpointLedger
@@ -133,7 +133,7 @@ def test_maintenance_is_invisible(history):
 def test_cluster_is_invisible(history, tmp_path_factory):
     t, snaps, _ = history
     ledger = CheckpointLedger(str(tmp_path_factory.mktemp("ledger2")))
-    cluster(t, ledger, job_id="cdc-cluster", curve="zorder")
+    cluster_global(t, ledger, job_id="cdc-cluster", curve="zorder")
     head = t.current_snapshot_id()
     assert head != snaps[4]
     assert table_changes(t, snaps[4], head).count() == 0

@@ -19,7 +19,7 @@ from open_finance_lakehouse_spark.operators.audit import (
     table_audit,
 )
 from open_finance_lakehouse_spark.operators.cluster import (
-    cluster,
+    cluster_global,
     clustering_quality,
 )
 from open_finance_lakehouse_spark.operators.compact import compact, plan_compaction
@@ -175,8 +175,8 @@ def test_cluster_tightens_stats_and_enables_skipping(spark, clip_table, ledger):
     sel_before, total_before = t.plan_files(
         predicates=[ColumnRange("dur_ms", lo=200, hi=280)])
 
-    res = cluster(t, ledger, "job-cluster-1", curve="zorder",
-                  target_bytes=512 * 1024)
+    res = cluster_global(t, ledger, "job-cluster-1", curve="zorder",
+                         target_bytes=512 * 1024)
     assert res["partitions_rewritten"] > 0
 
     q_after = clustering_quality(t, "dur_ms")
@@ -200,10 +200,38 @@ def test_cluster_tightens_stats_and_enables_skipping(spark, clip_table, ledger):
 def test_cluster_rerun_is_noop(spark, clip_table, ledger):
     t = clip_table
     snaps = len(t.snapshots())
-    res = cluster(t, ledger, "job-cluster-1", curve="zorder",
-                  target_bytes=512 * 1024)
+    res = cluster_global(t, ledger, "job-cluster-1", curve="zorder",
+                         target_bytes=512 * 1024)
     assert res["partitions_rewritten"] == 0
     assert len(t.snapshots()) == snaps
+
+
+def test_cluster_fingerprint_matches_spark_aggregate(spark):
+    """Ledger compatibility: the driver-side input fingerprint equals the
+    Spark aggregate an earlier planner stored in ledgers,
+    ``bit_xor(xxhash64(concat(curve:, file_path)))`` with the file count —
+    so a replay over an already-clustered file set still skips."""
+    import uuid as _uuid
+
+    from open_finance_lakehouse_spark.operators.cluster import (
+        _xor_fingerprint_py,
+    )
+
+    paths = [f"data/part={i % 4}/{_uuid.UUID(int=i * 7919 + 1).hex}.parquet"
+             for i in range(48)] + ["data/part=0/späti ü.parquet", "x"]
+    df = spark.createDataFrame([(p,) for p in paths], "file_path string")
+    for curve in ("zorder", "hilbert"):
+        row = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64(
+                F.concat(F.lit(f"{curve}:"), F.col("file_path")))).alias("x"),
+        ).first()
+        want = f"{curve}:{row['n']}:{row['x'] & 0xFFFFFFFFFFFFFFFF:016x}"
+        assert _xor_fingerprint_py(curve, paths) == want
+        # order-insensitive, and sensitive to the file set
+        assert _xor_fingerprint_py(curve, paths[::-1]) == want
+        assert _xor_fingerprint_py(curve, paths[1:]) != want
+    assert _xor_fingerprint_py("zorder", []) == "zorder:0:0000000000000000"
 
 
 # ------------------------------------------------------------------ expire
@@ -626,10 +654,8 @@ def test_distributed_orphan_gc(spark, tmp_path):
 
 
 def test_cluster_global_single_job(spark, tmp_path):
-    """Global mode: whole-table single-job clustering — parity, pruning,
-    per-partition lineage, and replay no-op."""
-    from open_finance_lakehouse_spark.operators.cluster import cluster_global
-
+    """Whole-table single-job clustering — parity, pruning, partition-pure
+    output files, per-partition lineage, and replay no-op."""
     loc = str(tmp_path / "clips_g")
     t = LakeTable.create(
         spark, loc, "clips_g", CLIP_SCHEMA_DDL,
@@ -643,23 +669,33 @@ def test_cluster_global_single_job(spark, tmp_path):
     sel_b, tot_b = t.plan_files(
         predicates=[ColumnRange("dur_ms", lo=200, hi=300)])
 
-    res = cluster_global(t, led, "g1", target_bytes=512 * 1024,
-                         exchange="range")
+    res = cluster_global(t, led, "g1", target_bytes=512 * 1024)
     assert res["partitions_rewritten"] == res["partitions_planned"] == 3
     assert res["rows"] == 150
     assert scan_parity(before, t.scan()).count() == 0
     sel_a, tot_a = t.plan_files(
         predicates=[ColumnRange("dur_ms", lo=200, hi=300)])
     assert (len(sel_a) / tot_a) < (len(sel_b) / tot_b)
-    # per-partition lineage grain preserved even in global mode
+    # every output file lies in exactly one partition: the rows it holds
+    # all route to the partition its directory names
+    live_part = {os.path.basename(f_.file_path): f_.partition
+                 for f_ in t.live_files()}
+    assert set(live_part.values()) == {"0", "1", "2"}
+    routed = (t.scan(with_file_path=True)
+              .withColumn("p", t.partition_value_col())
+              .groupBy("_file").agg(F.collect_set("p").alias("ps"))
+              .collect())
+    assert len(routed) == len(live_part)
+    for r in routed:
+        assert r["ps"] == [live_part[os.path.basename(r["_file"])]]
+    # per-partition lineage grain preserved for a whole-table job
     parts = {r["partition_id"] for r in
              (dict(job_id=x.get("job_id"), partition_id=x.get("partition_id"))
               for x in led.lineage_rows("g1"))}
     assert len(parts) == 3
 
     snaps = len(t.snapshots())
-    res2 = cluster_global(t, led, "g1", target_bytes=512 * 1024,
-                          exchange="range")
+    res2 = cluster_global(t, led, "g1", target_bytes=512 * 1024)
     assert res2["partitions_skipped"] == 3 and res2["partitions_rewritten"] == 0
     assert len(t.snapshots()) == snaps
     before.unpersist()
@@ -668,8 +704,6 @@ def test_cluster_global_single_job(spark, tmp_path):
 def test_cluster_hilbert_end_to_end(spark, tmp_path):
     """Hilbert-curve clustering through the full operator (not just the
     kernel mirror): byte-identical rows and tightened stats."""
-    from open_finance_lakehouse_spark.operators.cluster import cluster_global
-
     loc = str(tmp_path / "clips_h")
     t = LakeTable.create(
         spark, loc, "clips_h", CLIP_SCHEMA_DDL,
@@ -682,7 +716,7 @@ def test_cluster_hilbert_end_to_end(spark, tmp_path):
     before.count()
     q_before = clustering_quality(t, "dur_ms")
     res = cluster_global(t, led, "h1", curve="hilbert",
-                         target_bytes=256 * 1024, exchange="local")
+                         target_bytes=256 * 1024)
     assert res["rows"] == 200
     assert scan_parity(before, t.scan()).count() == 0
     assert clustering_quality(t, "dur_ms") < q_before
@@ -690,11 +724,9 @@ def test_cluster_hilbert_end_to_end(spark, tmp_path):
 
 
 def test_cluster_global_local_exchange_free(spark, tmp_path):
-    """Shuffle-free clustering: one task per partition sorts locally —
-    byte-identical rows, partition-pure target-size files, tighter stats,
-    and replay no-op; auto mode picks it for small bucketed partitions."""
-    from open_finance_lakehouse_spark.operators.cluster import cluster_global
-
+    """Small bucketed partitions: the range exchange keeps every output file
+    local to one partition and tiles each partition into several
+    target-size files — byte-identical rows, tighter stats, replay no-op."""
     loc = str(tmp_path / "clips_l")
     t = LakeTable.create(
         spark, loc, "clips_l", CLIP_SCHEMA_DDL,
@@ -707,23 +739,21 @@ def test_cluster_global_local_exchange_free(spark, tmp_path):
     before.count()
     q_before = clustering_quality(t, "dur_ms")
 
-    res = cluster_global(t, led, "l1", target_bytes=256 * 1024,
-                         exchange="local")
-    assert res["operation"].endswith(",local]")
+    res = cluster_global(t, led, "l1", target_bytes=256 * 1024)
+    assert res["operation"] == "cluster_global[zorder]"
     assert res["partitions_rewritten"] == res["partitions_planned"] == 3
     assert res["rows"] == 300
     assert scan_parity(before, t.scan()).count() == 0
     assert clustering_quality(t, "dur_ms") < q_before
     # every output file belongs to exactly one partition and there are
-    # multiple target-size chunks per partition (the local sort tiled them)
+    # multiple target-size chunks per partition
     by_part: dict[str, int] = {}
     for f_ in t.live_files():
         by_part[f_.partition] = by_part.get(f_.partition, 0) + 1
     assert set(by_part) == {"0", "1", "2"} and all(
         n >= 2 for n in by_part.values())
 
-    res2 = cluster_global(t, led, "l1", target_bytes=256 * 1024,
-                          exchange="local")
+    res2 = cluster_global(t, led, "l1", target_bytes=256 * 1024)
     assert res2["partitions_skipped"] == 3 and res2["partitions_rewritten"] == 0
     before.unpersist()
 
@@ -1160,30 +1190,6 @@ def test_merge_composite_key_crash_resume(spark, tmp_path, monkeypatch):
     assert t.scan().count() == 90  # exactly-once: no double apply
 
 
-def test_cluster_global_oversize_partition_advisory(spark, tmp_path,
-                                                    monkeypatch):
-    """When the largest partition outgrows the single-task sort bound,
-    auto mode must fall to the range exchange AND surface the re-bucket
-    advisory (the sf10 finding, BENCH/sf10.md) — while staying correct."""
-    import importlib
-    cl = importlib.import_module(
-        "open_finance_lakehouse_spark.operators.cluster")
-
-    t = LakeTable.create(
-        spark, str(tmp_path / "adv"), "adv", CLIP_SCHEMA_DDL,
-        partition_spec={"kind": "bucket", "column": "clip_id",
-                        "num_buckets": 2})
-    t.append(synth_clips(spark, 40, dur_max_ms=500), max_records_per_file=8)
-    led = CheckpointLedger(str(tmp_path / "led_adv"))
-
-    monkeypatch.setattr(cl, "LOCAL_SORT_MAX_PARTITION_BYTES", 1)
-    res = cl.cluster_global(t, led, "adv-job", curve="zorder",
-                            target_bytes=1 << 20, exchange="auto")
-    assert res["operation"] == "cluster_global[zorder,range]"
-    assert "rewrite_partitioning" in res.get("advisory", "")
-    assert t.scan().count() == 40
-
-
 # ------------------------------------------- concurrent-writer conflicts
 
 
@@ -1299,36 +1305,6 @@ def test_merge_surrenders_to_concurrent_compact_then_replay_converges(
     assert t.delete_orphans(grace_ms=0, dry_run=True) == []
 
 
-def test_cluster_surrenders_conflicted_partition(spark, tmp_path,
-                                                 monkeypatch):
-    """Per-partition cluster mode: a commit-time conflict surrenders only
-    that partition (staged output discarded, counted, others proceed)."""
-    t = LakeTable.create(
-        spark, str(tmp_path / "race3"), "race3", CLIP_SCHEMA_DDL,
-        partition_spec={"kind": "bucket", "column": "clip_id",
-                        "num_buckets": 2})
-    t.append(synth_clips(spark, 40, dur_max_ms=400), max_records_per_file=5)
-    n0 = t.scan().count()
-
-    from open_finance_lakehouse_spark.format.table import CommitConflict
-    real_commit = LakeTable.commit_rewrite
-    state = {"raised": False}
-
-    def flaky(self, *a, **kw):
-        if not state["raised"] and kw.get("operation") == "cluster":
-            state["raised"] = True
-            raise CommitConflict("synthetic: file no longer live")
-        return real_commit(self, *a, **kw)
-
-    monkeypatch.setattr(LakeTable, "commit_rewrite", flaky)
-    led = CheckpointLedger(str(tmp_path / "led_race3"))
-    res = cluster(t, led, "race3-job", curve="zorder", concurrency=1)
-    assert state["raised"]
-    assert res["partitions_conflicted"] == 1
-    assert res["partitions_rewritten"] == 1
-    assert t.refresh().scan().count() == n0
-
-
 # ------------------------------------------------------------------ doctor
 
 
@@ -1363,39 +1339,6 @@ def test_doctor_reads_signals_and_advises(spark, tmp_path):
     assert rep2["signals"]["staged_pending"] == []
     assert rep2["signals"]["small_file_fraction"] < 0.5 or \
         rep2["signals"]["files"] <= 2
-
-
-def test_doctor_flags_oversized_partitions(spark, tmp_path, monkeypatch):
-    """The sf10 finding as an advisory: when the largest bucket partition
-    outgrows the local-sort cap, clustering auto-routes to the range
-    exchange (shuffle tax) — the doctor must recommend re-bucketing with
-    a sane power-of-two count BEFORE a maintenance run pays that tax."""
-    import importlib
-
-    cl = importlib.import_module(
-        "open_finance_lakehouse_spark.operators.cluster")
-    from open_finance_lakehouse_spark.operators.doctor import doctor
-
-    t = LakeTable.create(
-        spark, str(tmp_path / "fat"), "fat", CLIP_SCHEMA_DDL,
-        partition_spec={"kind": "bucket", "column": "clip_id",
-                        "num_buckets": 2})
-    t.append(synth_clips(spark, 40, dur_max_ms=400))
-
-    # at the real 512 MB cap this toy table is healthy: no re-bucket advice
-    rep = doctor(t)
-    assert not any("re-bucket" in a for a in rep["advice"])
-
-    # shrink the cap below the toy partition size: advice must appear,
-    # carry the measured signal, and suggest MORE buckets than current
-    monkeypatch.setattr(cl, "LOCAL_SORT_MAX_PARTITION_BYTES", 4096)
-    rep2 = doctor(t)
-    assert rep2["signals"]["max_partition_mb"] > 0
-    hit = [a for a in rep2["advice"] if "re-bucket" in a]
-    assert hit and "rewrite-partitioning" in hit[0]
-    import re
-    n = int(re.search(r"~(\d+) buckets", hit[0]).group(1))
-    assert n > 2 and (n & (n - 1)) == 0  # > current count, power of two
 
 
 def test_merge_temporal_key_plans_in_micros(spark, tmp_path):
@@ -1559,11 +1502,8 @@ def test_cluster_global_double_conflict_surrenders(spark, tmp_path,
 
 
 def test_maintenance_knobs_refuse_unknown_values(spark, tmp_path):
-    """snr_gate / cluster_mode / exchange typos must refuse loudly, not
-    silently disable a gate or fall through to the shuffle path."""
-    from open_finance_lakehouse_spark.operators.cluster import (
-        cluster_global,
-    )
+    """An snr_gate typo must refuse loudly, not silently disable the
+    gate."""
     from open_finance_lakehouse_spark.operators.pipeline import (
         run_maintenance,
     )
@@ -1576,10 +1516,6 @@ def test_maintenance_knobs_refuse_unknown_values(spark, tmp_path):
     led = CheckpointLedger(str(tmp_path / "led_knob"))
     with pytest.raises(ValueError, match="snr_gate"):
         run_maintenance(t, led, snr_gate="overlapped")
-    with pytest.raises(ValueError, match="cluster_mode"):
-        run_maintenance(t, led, cluster_mode="globl")
-    with pytest.raises(ValueError, match="exchange"):
-        cluster_global(t, led, "x", exchange="Local")
 
 
 def test_scan_parity_catches_dropped_duplicate_copy(spark):

@@ -970,6 +970,33 @@ def test_dead_metadata_claim_recovery(spark, warehouse):
         md.read_current_metadata(t.location)
 
 
+def test_dead_claim_recovery_refuses_when_unlink_keeps_failing(
+        spark, warehouse, monkeypatch):
+    """A corpse head that cannot be removed (permissions, read-only
+    mount) must surface as the unreadable-metadata error — recovery
+    recurses only once the corpse is actually gone."""
+    from open_finance_lakehouse_spark.format import metadata as md
+
+    t = make_table(spark, warehouse, "stuckcorpse")
+    t.append(kdf(spark, 0, 10))
+    dead = os.path.join(md.metadata_dir(t.location),
+                        f"v{t.meta.version + 1}.metadata.json")
+    with open(dead, "w"):
+        pass
+    os.utime(dead, (1, 1))
+    real_unlink = os.unlink
+
+    def refuse(path, *a, **kw):
+        if os.fspath(path) == dead:
+            raise PermissionError(13, "Permission denied", path)
+        return real_unlink(path, *a, **kw)
+
+    monkeypatch.setattr(md.os, "unlink", refuse)
+    with pytest.raises(ValueError, match="unreadable"):
+        md.read_current_metadata(t.location)
+    assert os.path.exists(dead)
+
+
 def test_failed_staging_write_cleans_up(spark, warehouse):
     """A failed Spark write must not leak its _staging tree: no GC path
     reclaims _staging except the age-gated corpse sweep, so repeated
@@ -1005,4 +1032,23 @@ def test_gc_sweeps_dead_staging_and_tolerates_lost_unlink_race(
     t.delete_orphans(grace_ms=60_000, distributed=False)  # must not raise
     assert not os.path.exists(os.path.join(base, "deadjob"))
     assert os.path.exists(os.path.join(base, "livejob"))
+    assert t.refresh().scan().count() == 10
+
+
+def test_gc_at_zero_grace_keeps_a_running_writers_staging(spark, warehouse):
+    """Grace 0 must not rmtree a _staging tree a long rewrite is still
+    writing: the staging age gate has an hour floor, so a 5-minute-old
+    tree survives while a 2-hour-old corpse is swept."""
+    import time
+
+    t = make_table(spark, warehouse, "stagefloor")
+    t.append(kdf(spark, 0, 10))
+    base = os.path.join(t.location, "_staging")
+    now = time.time()
+    for name, age_s in (("running", 5 * 60), ("corpse", 2 * 3600)):
+        os.makedirs(os.path.join(base, name))
+        os.utime(os.path.join(base, name), (now - age_s, now - age_s))
+    t.delete_orphans(grace_ms=0, distributed=False)
+    assert os.path.exists(os.path.join(base, "running"))
+    assert not os.path.exists(os.path.join(base, "corpse"))
     assert t.refresh().scan().count() == 10
