@@ -18,7 +18,7 @@ Scale shape — cost ∝ CHANGE VOLUME, never O(table):
 
 - **append** commits contribute their added files as inserts — a plain
   parquet scan of exactly those files, no comparison work (this also covers
-  ``merge_into``'s insert-only partition commits, which land as appends).
+  ``merge_into``'s insert-only batches, which land as appends).
 - **Row-preserving maintenance** (compact / cluster / rewrite, including
   partition-spec and schema rewrites, which relabel or re-route bytes but
   change no logical row) contributes NOTHING and reads NOTHING — maintenance

@@ -19,15 +19,17 @@ discipline — /root/reference/ofl/streaming/bronze.py:185-194 — rebuilt on
 the checkpoint ledger):
 
 - **A monotone batch watermark** (``__txn__`` ledger record, advanced only
-  after the WHOLE batch's partitions commit) rejects any batch id ≤ the
-  last fully-committed one — a replayed or out-of-order-duplicated
-  micro-batch is a no-op even after later batches ran, exactly Delta's
+  after the batch's merge commits) rejects any batch id ≤ the last
+  committed one — a replayed or out-of-order-duplicated micro-batch is a
+  no-op even after later batches ran, exactly Delta's
   ``txnVersion <= latest`` rule.
-- **Mid-batch crash replays resume at partition granularity.** A crash
-  leaves the watermark unadvanced, so the replay re-enters the merge; the
-  per-partition (job_id, partition, ``source_token=f"batch-{batch_id}"``)
-  skip then no-ops every partition the first attempt already rewrote and
-  applies only the missing ones.
+- **Mid-batch crash replays retry the whole batch.** The merge lands a
+  batch as one snapshot, so a crash leaves either nothing or the whole
+  batch applied, and the watermark unadvanced. The replay re-enters the
+  merge: the (job_id, ``source_token=f"batch-{batch_id}"``) ledger record
+  no-ops a batch whose commit it recorded and re-applies any other (a
+  crash between the commit and the record re-applies full-row upserts
+  and deletes, which leaves the same rows).
 - **Out-of-order duplicates WITHIN a batch lose by seq.** The source
   contract's monotone ``seq`` decides each key's winner (salted
   latest-per-key dedup). Across DISTINCT batch ids, later batches win
@@ -66,13 +68,13 @@ def streaming_upsert(
     contract: the table's columns plus ``op`` ('U'/'D') and ``seq``.
 
     ``conflict_retries``: a concurrent maintenance commit can make
-    ``merge_into`` SURRENDER a partition (it returns with
-    ``partitions_conflicted > 0`` instead of raising); re-entering the
-    merge with the same source_token replans exactly the surrendered
-    partitions against the new head (committed ones no-op). Retried up
-    to this many times; if partitions are STILL conflicted the sink
-    raises so Spark replays the batch — the watermark must never
-    advance past a partially-applied batch (silent data loss)."""
+    ``merge_into`` SURRENDER the batch (it returns with
+    ``partitions_conflicted > 0`` instead of raising, having changed
+    nothing); re-entering the merge with the same source_token replans
+    the whole batch against the new head. Retried up to this many times;
+    if the batch is STILL conflicted the sink raises so Spark replays it —
+    the watermark must never advance past an unapplied batch (silent data
+    loss)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         last = ledger.get(job_id, TXN_PARTITION_ID)
@@ -92,9 +94,9 @@ def streaming_upsert(
                 f"{res['partitions_conflicted']} partition(s) still "
                 f"conflicted after {conflict_retries + 1} merge attempts; "
                 "watermark NOT advanced — the batch will replay")
-        # advance the watermark ONLY after every partition committed — a
-        # mid-batch crash (or a surrendered partition, above) leaves it
-        # behind so the replay resumes at partition granularity
+        # advance the watermark ONLY after the merge committed — a crash
+        # (or a surrendered batch, above) leaves it behind so the replay
+        # retries the whole batch
         ledger.upsert(CheckpointRecord(
             job_id=job_id, table=table.meta.name,
             partition_id=TXN_PARTITION_ID,

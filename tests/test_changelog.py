@@ -111,11 +111,13 @@ def test_merge_surfaces_delete_insert_pairs(history):
     assert all(not v.startswith("UPDATED ") for v in upd_old.values())
     assert (dele.filter(F.col("clip_id").isin(del_ids)).count()
             == len(del_ids))
-    # every change is stamped with one of the merge's per-partition
-    # commits — all inside the interval (s2, s3]
+    # the merge is ONE commit: exactly one snapshot lies in (s2, s3], and
+    # every change is stamped with it
+    assert [s.snapshot_id for s in t.snapshots()
+            if snaps[2] < s.snapshot_id <= snaps[3]] == [snaps[3]]
     stamped = {r[0] for r in ch.select(COMMIT_SNAPSHOT_COL).distinct()
                .collect()}
-    assert all(snaps[2] < s <= snaps[3] for s in stamped)
+    assert stamped == {snaps[3]}
     ch.unpersist()
 
 
@@ -171,7 +173,7 @@ def test_changes_summary_counts(history):
          changes_summary(table_changes(t, snaps[0], snaps[3])).collect()}
     assert s[snaps[1]] == (20, 0)
     assert s[snaps[2]] == (10, 0)
-    # the MERGE lands one commit per touched partition; totals across them
+    # totals of every commit after s2 (the MERGE is one commit)
     merge_ins = sum(v[0] for k, v in s.items() if k > snaps[2])
     merge_del = sum(v[1] for k, v in s.items() if k > snaps[2])
     assert (merge_ins, merge_del) == (len(upd_ids) + 4,

@@ -111,8 +111,7 @@ def test_batch_cdc_interval_merge_surfaces_delete_insert(spark, history):
            got.groupBy(cl.CHANGE_TYPE_COL).agg(F.count("*").alias("n"))
            .collect()}
     assert per == {cl.INSERT: 7, cl.DELETE: 5}  # 3 upd + 4 ins / 3 upd + 2 del
-    # the merge may land as several commits (insert-only partitions commit
-    # as appends) — the stamp set must match the oracle's exactly
+    # the stamp set must match the oracle's exactly
     stamps = {r[0] for r in
               got.select(cl.COMMIT_SNAPSHOT_COL).distinct().collect()}
     oracle_stamps = {r[0] for r in cl.table_changes(t, snaps[2])

@@ -475,46 +475,159 @@ def test_merge_distinct_batches_same_job_both_apply(spark, tmp_path):
     assert t.scan().count() == 26  # both batches inserted
 
 
-def test_merge_partitions_stage_concurrently(spark, tmp_path, monkeypatch):
-    """≥2 partition rewrites must be in flight at once (staging overlaps;
-    commits serialize under the CAS lock) — the compact/cluster concurrency
-    contract extended to MERGE (r1 VERDICT #3)."""
-    import threading
-    import time as _time
-
+def test_merge_stages_once_and_adds_one_snapshot(spark, tmp_path,
+                                                monkeypatch):
+    """A merge touching 3 buckets is one transaction: one routed staging
+    write and exactly one new snapshot, not one per bucket."""
     t = LakeTable.create(
         spark, str(tmp_path / "clips_cc"), "clips_cc", CLIP_SCHEMA_DDL,
         partition_spec={"kind": "bucket", "column": "clip_id",
-                        "num_buckets": 4},
+                        "num_buckets": 3},
     )
     t.append(synth_clips(spark, 60, dur_max_ms=500), max_records_per_file=8)
     led = CheckpointLedger(str(tmp_path / "ledger_cc"))
 
-    intervals = []
-    lock = threading.Lock()
+    calls = []
     real_stage = LakeTable.stage_dataframe
 
-    def tracked_stage(self, *a, **kw):
-        t0 = _time.monotonic()
-        out = real_stage(self, *a, **kw)
-        with lock:
-            intervals.append((t0, _time.monotonic()))
-        return out
+    def counted_stage(self, *a, **kw):
+        calls.append(kw)
+        return real_stage(self, *a, **kw)
 
-    monkeypatch.setattr(LakeTable, "stage_dataframe", tracked_stage)
+    monkeypatch.setattr(LakeTable, "stage_dataframe", counted_stage)
     src = (t.scan().withColumn("transcript",
                                F.concat(F.lit("V2 "), "transcript"))
            .withColumn("op", F.lit("U"))
            .withColumn("seq", F.lit(5).cast("long")))
+    snaps = len(t.snapshots())
     res = merge_into(t, src, led, "job-cc", source_token="cc-1")
-    assert res["partitions_rewritten"] >= 2
-    overlapping = any(
-        a0 < b1 and b0 < a1
-        for i, (a0, a1) in enumerate(intervals)
-        for (b0, b1) in intervals[i + 1:]
-    )
-    assert overlapping, f"no staging overlap in {intervals}"
+    assert res["partitions_planned"] == 3
+    assert res["partitions_rewritten"] == 3
+    assert len(calls) == 1
+    # the routed write keeps each bucket's rows together: one file per
+    # bucket, as the per-bucket rewrites wrote
+    assert res["files_out"] == 3
+    assert len(t.snapshots()) == snaps + 1
     assert t.scan().filter(~F.col("transcript").startswith("V2 ")).count() == 0
+    # one ledger record and one lineage entry for the batch
+    recs = led.records("job-cc")
+    assert [(r.partition_id, r.status) for r in recs] == \
+        [("batch", STATUS_COMMITTED)]
+    assert {r["partition_id"] for r in led.lineage_rows("job-cc")} == \
+        {"batch"}
+
+
+def _kv_table(spark, loc, name, n=40):
+    """A 4-bucket ``k -> v`` table of ``n`` rows in 5-row files. Like the
+    benchmark's upsert table it declares its salt policy, so merges run no
+    hot-key probe."""
+    t = LakeTable.create(
+        spark, loc, name, "k BIGINT, v STRING",
+        partition_spec={"kind": "bucket", "column": "k", "num_buckets": 4},
+        maintenance={"salt_count": 1})
+    t.append(spark.range(n).select(F.col("id").alias("k"),
+                                   F.lit("v1").alias("v")),
+             max_records_per_file=5)
+    return t
+
+
+def _kv_batch(spark, n=40):
+    """Updates every even key, deletes four odd keys, inserts four new
+    keys; returns (source, post-batch map)."""
+    rows = ([(k, "v2", "U", 1) for k in range(0, n, 2)]
+            + [(k, None, "D", 1) for k in (1, 3, 5, 7)]
+            + [(k, "new", "U", 1) for k in range(1000, 1004)])
+    post = {k: "v1" for k in range(n)}
+    for k, v, op, _ in rows:
+        if op == "D":
+            post.pop(k)
+        else:
+            post[k] = v
+    src = spark.createDataFrame(rows, "k BIGINT, v STRING, op STRING, "
+                                      "seq LONG")
+    return src, post
+
+
+def test_merge_readers_see_whole_batch_or_none(spark, tmp_path):
+    """Snapshot isolation under real contention: a reader thread polls
+    fresh table handles while a 4-bucket merge runs and reads every head it
+    finds; each key→value map it sees is the pre-batch map or the
+    post-batch map, never a mix."""
+    import threading
+    import time
+
+    loc = str(tmp_path / "iso")
+    t = _kv_table(spark, loc, "iso")
+    pre = {r["k"]: r["v"] for r in t.scan().collect()}
+    src, post = _kv_batch(spark)
+
+    seen, heads, errors = [], [], []
+    stop = threading.Event()
+
+    def reader():
+        try:
+            while not stop.is_set():
+                h = LakeTable.load(spark, loc)
+                if not heads or h.current_snapshot_id() != heads[-1]:
+                    # read the head this handle planned, whatever lands
+                    # meanwhile
+                    seen.append({r["k"]: r["v"] for r in h.scan().collect()})
+                    heads.append(h.current_snapshot_id())
+                time.sleep(0.002)
+        except Exception as e:  # surfaced by the asserts below
+            errors.append(e)
+
+    th = threading.Thread(target=reader, daemon=True)
+    th.start()
+    try:
+        deadline = time.monotonic() + 120
+        while not heads and th.is_alive() and time.monotonic() < deadline:
+            time.sleep(0.01)
+        res = merge_into(t, src, CheckpointLedger(str(tmp_path / "led_iso")),
+                         "iso-merge", source_token="iso-1")
+        final = t.current_snapshot_id()
+        while (heads[-1:] != [final] and th.is_alive()
+               and time.monotonic() < deadline):
+            time.sleep(0.01)
+    finally:
+        stop.set()
+        th.join(timeout=120)
+    assert not th.is_alive()
+    assert not errors, errors
+    assert res["partitions_rewritten"] == 4
+    assert heads[-1] == final and seen[0] == pre
+    mixed = [m for m in seen if m != pre and m != post]
+    assert not mixed, f"{len(mixed)} of {len(seen)} reads saw a torn batch"
+    assert seen[-1] == post
+
+
+def test_merge_spark_job_budget(spark, tmp_path):
+    """A 4-bucket merge (updates, deletes and inserts in every bucket)
+    runs at most 10 Spark jobs: one source pass plans it, one join feeds
+    one write — no job fan-out per bucket."""
+    t = _kv_table(spark, str(tmp_path / "budget"), "budget")
+    src, post = _kv_batch(spark)
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group = "test-merge-job-budget"
+
+    def job_ids() -> set:
+        # jobs started on threads that do not inherit the group have none
+        return (set(st.getJobIdsForGroup(group))
+                | set(st.getJobIdsForGroup(None)))
+
+    sc.setJobGroup(group, "merge job budget")
+    try:
+        before = job_ids()
+        res = merge_into(t, src, CheckpointLedger(str(tmp_path / "led_b")),
+                         "budget-merge", source_token="b-1")
+        jobs = job_ids() - before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res["partitions_rewritten"] == 4
+    assert 0 < len(jobs) <= 10, f"{len(jobs)} Spark jobs for one merge"
+    assert {r["k"]: r["v"] for r in t.scan().collect()} == post
 
 
 def test_merge_generic_long_key(spark, tmp_path):
@@ -546,8 +659,9 @@ def test_merge_generic_long_key(spark, tmp_path):
 
 
 def test_merge_resumes_after_crash_mid_job(spark, tmp_path, monkeypatch):
-    """Crash after one partition committed: the re-run applies ONLY the
-    remaining partitions (file-granularity resume, no double-apply)."""
+    """A crash in the merge's commit leaves the head snapshot and every row
+    unchanged (the batch is one transaction); the re-run applies the whole
+    batch exactly once."""
     t = LakeTable.create(
         spark, str(tmp_path / "clips_cr"), "clips_cr", CLIP_SCHEMA_DDL,
         partition_spec={"kind": "bucket", "column": "clip_id",
@@ -559,35 +673,36 @@ def test_merge_resumes_after_crash_mid_job(spark, tmp_path, monkeypatch):
                                F.concat(F.lit("V2 "), "transcript"))
            .withColumn("op", F.lit("U"))
            .withColumn("seq", F.lit(5).cast("long")))
+    head = t.current_snapshot_id()
+    before = sorted(tuple(r) for r in
+                    t.scan().select("clip_id", "transcript").collect())
 
-    calls = {"n": 0}
     real = LakeTable.commit_rewrite
 
-    def crash_after_first(self, *a, **kw):
-        if calls["n"] >= 1:
-            raise RuntimeError("simulated crash")
-        calls["n"] += 1
-        return real(self, *a, **kw)
+    def crash(self, *a, **kw):
+        raise RuntimeError("simulated crash")
 
-    monkeypatch.setattr(LakeTable, "commit_rewrite", crash_after_first)
-    try:
-        merge_into(t, src, led, "job-crash", source_token="cr-1",
-                   concurrency=1)
-    except RuntimeError:
-        pass
+    monkeypatch.setattr(LakeTable, "commit_rewrite", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        merge_into(t, src, led, "job-crash", source_token="cr-1")
     monkeypatch.setattr(LakeTable, "commit_rewrite", real)
 
-    done_before = sum(1 for r in led.records("job-crash")
-                      if r.status == STATUS_COMMITTED)
-    assert done_before == 1  # exactly one partition survived the crash
+    assert t.refresh().current_snapshot_id() == head
+    assert sorted(tuple(r) for r in
+                  t.scan().select("clip_id", "transcript").collect()) == before
+    assert not any(r.status == STATUS_COMMITTED
+                   for r in led.records("job-crash"))
 
     res = merge_into(t, src, led, "job-crash", source_token="cr-1")
-    assert res["partitions_skipped"] == done_before
-    assert res["partitions_rewritten"] == res["partitions_planned"] - done_before
+    assert res["partitions_skipped"] == 0
+    assert res["partitions_rewritten"] == res["partitions_planned"] == 3
     # every row updated exactly once — no double-apply, no missed partition
     assert t.scan().filter(~F.col("transcript").startswith("V2 ")).count() == 0
     assert t.scan().filter(F.col("transcript").startswith("V2 V2")).count() == 0
     assert t.scan().count() == 45
+    # the replay after commit is a no-op
+    res2 = merge_into(t, src, led, "job-crash", source_token="cr-1")
+    assert res2["partitions_skipped"] == res2["partitions_planned"]
 
 
 def test_parity_catches_dropped_null_payload_row(spark):
@@ -778,42 +893,6 @@ def test_merge_key_must_match_partition_column(spark, tmp_path):
         "kind STRING, event_id BIGINT, amount DOUBLE, op STRING, seq LONG")
     with pytest.raises(ValueError, match="bucket-partition"):
         merge_into(t, src, led, "wk", source_token="b1", key="kind")
-
-
-def test_merge_broadcast_gated_on_file_count(spark, tmp_path, monkeypatch):
-    """The planner's broadcast hint on the file-bounds relation must
-    disappear above the live-file estimate threshold (a forced broadcast
-    of tens of millions of file entries would OOM the driver)."""
-    import importlib
-
-    # the operators package re-exports the merge_into FUNCTION under the
-    # submodule's name; import_module gets the module itself
-    mi = importlib.import_module(
-        "open_finance_lakehouse_spark.operators.merge_into")
-
-    t = LakeTable.create(
-        spark, str(tmp_path / "bcast"), "bcast",
-        "event_id BIGINT, amount DOUBLE",
-        partition_spec={"kind": "bucket", "column": "event_id",
-                        "num_buckets": 2},
-    )
-    t.append(spark.range(20).select(
-        F.col("id").alias("event_id"), F.lit(1.0).alias("amount")))
-    src = (spark.createDataFrame([(3, 5.0, "U", 1)],
-                                 "event_id BIGINT, amount DOUBLE, "
-                                 "op STRING, seq LONG")
-           .withColumn("__part", t.partition_value_col()))
-
-    def hint_in_plan(df) -> bool:
-        # the HINT lives in the optimized logical plan's join node; the
-        # physical plan can't distinguish a hint from AQE's size-based
-        # auto-broadcast at sandbox scale
-        return "broadcast" in \
-            df._jdf.queryExecution().optimizedPlan().toString().lower()
-
-    assert hint_in_plan(mi.merge_plan_df(t, src, key="event_id"))
-    monkeypatch.setattr(mi, "BROADCAST_FILE_LIMIT", 1)
-    assert not hint_in_plan(mi.merge_plan_df(t, src, key="event_id"))
 
 
 def test_per_table_maintenance_config_drives_pipeline(spark, tmp_path):
@@ -1133,8 +1212,9 @@ def test_merge_composite_natural_key(spark, tmp_path):
 
 
 def test_merge_composite_key_crash_resume(spark, tmp_path, monkeypatch):
-    """Composite-key merge resumes at file granularity after a mid-job
-    crash, exactly like the single-key path (salted dedup included)."""
+    """A composite-key merge that crashes in its commit leaves the table
+    unchanged, and the replay applies the whole batch exactly once, like
+    the single-key path (salted dedup included)."""
     t = LakeTable.create(
         spark, str(tmp_path / "factcr"), "factcr",
         "series_id STRING, day DATE, value DOUBLE",
@@ -1163,29 +1243,25 @@ def test_merge_composite_key_crash_resume(spark, tmp_path, monkeypatch):
     assert dedup_latest_salted(
         src, key=["series_id", "day"], n_salts=4).count() == 90
 
-    calls = {"n": 0}
+    head = t.current_snapshot_id()
     real = LakeTable.commit_rewrite
 
-    def crash_after_first(self, *a, **kw):
-        if calls["n"] >= 1:
-            raise RuntimeError("simulated crash")
-        calls["n"] += 1
-        return real(self, *a, **kw)
+    def crash(self, *a, **kw):
+        raise RuntimeError("simulated crash")
 
-    monkeypatch.setattr(LakeTable, "commit_rewrite", crash_after_first)
-    try:
+    monkeypatch.setattr(LakeTable, "commit_rewrite", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
         merge_into(t, src, led, "factcr-job", source_token="cr-1",
-                   key=["series_id", "day"], concurrency=1, n_salts=4)
-    except RuntimeError:
-        pass
+                   key=["series_id", "day"], n_salts=4)
     monkeypatch.setattr(LakeTable, "commit_rewrite", real)
-    done = sum(1 for r in led.records("factcr-job")
-               if r.status == STATUS_COMMITTED)
-    assert done == 1
+    assert t.refresh().current_snapshot_id() == head
+    assert t.scan().filter(F.col("value") >= 1000.0).count() == 0
+    assert not any(r.status == STATUS_COMMITTED
+                   for r in led.records("factcr-job"))
 
     res = merge_into(t, src, led, "factcr-job", source_token="cr-1",
                      key=["series_id", "day"], n_salts=4)
-    assert res["partitions_skipped"] == done
+    assert res["partitions_rewritten"] == res["partitions_planned"]
     assert t.scan().filter(F.col("value") < 1000.0).count() == 0
     assert t.scan().count() == 90  # exactly-once: no double apply
 
@@ -1253,10 +1329,10 @@ def test_merge_surrenders_to_concurrent_compact_then_replay_converges(
         spark, tmp_path, monkeypatch):
     """MERGE racing compaction — the real-world concurrent-maintenance
     shape: compact lands first and rewrites every file the merge planned,
-    so the merge surrenders each partition instead of landing a stale
-    copy-on-write; replaying the SAME batch (same job_id + source_token)
-    replans against the compacted head and converges to exactly the
-    upsert/delete oracle state."""
+    so the merge surrenders the whole batch instead of landing a stale
+    copy-on-write and changes nothing; replaying the SAME batch (same
+    job_id + source_token) replans against the compacted head and
+    converges to exactly the upsert/delete oracle state."""
     t = LakeTable.create(
         spark, str(tmp_path / "race2"), "race2", CLIP_SCHEMA_DDL,
         partition_spec={"kind": "bucket", "column": "clip_id",
@@ -1268,12 +1344,17 @@ def test_merge_surrenders_to_concurrent_compact_then_replay_converges(
     upd_ids, del_ids = ids[:2], ids[2:]
     src = _merge_source(spark, t, upd_ids, del_ids, hot_dup=4)
 
+    def state():
+        return sorted(tuple(r) for r in t.refresh().scan()
+                      .select("clip_id", "transcript").collect())
+
+    before = state()
     real_commit = LakeTable.commit_rewrite
-    state = {"compacted": False}
+    injected = {"compacted": False}
 
     def inject(self, *a, **kw):
-        if not state["compacted"]:
-            state["compacted"] = True
+        if not injected["compacted"]:
+            injected["compacted"] = True
             other = LakeTable.load(spark, t.location)
             res_c = compact(other, CheckpointLedger(str(tmp_path / "led_c")),
                             "race2-compact", concurrency=1)
@@ -1282,27 +1363,59 @@ def test_merge_surrenders_to_concurrent_compact_then_replay_converges(
 
     monkeypatch.setattr(LakeTable, "commit_rewrite", inject)
     led = CheckpointLedger(str(tmp_path / "led_race2"))
-    res = merge_into(t, src, led, "race2-merge", source_token="rb-1",
-                     concurrency=1)
-    assert state["compacted"]
+    res = merge_into(t, src, led, "race2-merge", source_token="rb-1")
+    assert injected["compacted"]
     # compact took every touched file out of the live set first
     assert res["partitions_conflicted"] == res["partitions_planned"] > 0
     assert res["partitions_rewritten"] == 0
-    # snapshot isolation held: the merge changed NOTHING
-    assert t.refresh().scan().count() == n0
+    # snapshot isolation held: the merge changed NOTHING, and its staged
+    # output was discarded
+    assert state() == before
+    assert t.delete_orphans(grace_ms=0, dry_run=True) == []
 
     monkeypatch.setattr(LakeTable, "commit_rewrite", real_commit)
-    res2 = merge_into(t, src, led, "race2-merge", source_token="rb-1",
-                      concurrency=1)
+    res2 = merge_into(t, src, led, "race2-merge", source_token="rb-1")
     assert res2["partitions_conflicted"] == 0
-    assert res2["partitions_rewritten"] == res["partitions_conflicted"]
+    assert res2["partitions_rewritten"] == res["partitions_planned"]
     after = t.refresh().scan()
     assert after.count() == n0 - len(del_ids)
     assert after.filter(F.col("clip_id").isin(del_ids)).count() == 0
     got = [r["transcript"] for r in
            after.filter(F.col("clip_id").isin(upd_ids)).collect()]
-    assert got and all(v.startswith("UPDATED ") for v in got)
+    assert len(got) == len(upd_ids)
+    assert all(v.startswith("UPDATED ") for v in got)
     assert t.delete_orphans(grace_ms=0, dry_run=True) == []
+
+
+def test_merge_skips_batch_committed_per_bucket(spark, tmp_path):
+    """A ledger written by builds that committed each bucket separately —
+    one committed `part=<p>` record per planned bucket, all carrying the
+    batch fingerprint — still marks the batch done: the replay adds no
+    snapshot."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "legacy"), "legacy", CLIP_SCHEMA_DDL,
+        partition_spec={"kind": "bucket", "column": "clip_id",
+                        "num_buckets": 3})
+    t.append(synth_clips(spark, 30, dur_max_ms=400), max_records_per_file=5)
+    src = (t.scan().withColumn("transcript",
+                               F.concat(F.lit("V2 "), "transcript"))
+           .withColumn("op", F.lit("U"))
+           .withColumn("seq", F.lit(5).cast("long")))
+    parts = [r[0] for r in src.select(t.partition_value_col())
+             .distinct().collect()]
+    assert len(parts) == 3
+    led = CheckpointLedger(str(tmp_path / "led_legacy"))
+    fp = file_set_hash(["merge:lg-1"])
+    for p in parts:
+        led.upsert(CheckpointRecord(
+            job_id="lg-job", table="legacy", partition_id=f"part={p}",
+            file_set_hash=fp, status=STATUS_COMMITTED))
+    snaps = len(t.snapshots())
+    res = merge_into(t, src, led, "lg-job", source_token="lg-1")
+    assert res["partitions_skipped"] == res["partitions_planned"] == 3
+    assert res["partitions_rewritten"] == 0
+    assert len(t.snapshots()) == snaps
+    assert t.scan().filter(F.col("transcript").startswith("V2 ")).count() == 0
 
 
 # ------------------------------------------------------------------ doctor
