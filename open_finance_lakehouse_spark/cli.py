@@ -30,14 +30,10 @@ from open_finance_lakehouse_spark.sources.synth import (
 
 
 def _meta_row_count(t: LakeTable) -> int:
-    """Row count from manifest footers — the report number for
+    """Row count from the manifest entries — the report number for
     metadata-only commands (rollback etc.), which must not trigger a
-    full data scan just to print a counter."""
-    from pyspark.sql import functions as F
-
-    return int(t.files_df()
-               .agg(F.coalesce(F.sum("record_count"), F.lit(0)))
-               .first()[0])
+    full data scan (or any Spark job) just to print a counter."""
+    return sum(f.record_count for f in t.live_files())
 
 
 def _common(p: argparse.ArgumentParser):
@@ -495,8 +491,7 @@ def _execute(spark, args) -> dict:
         if args.cmd == "compact":
             from open_finance_lakehouse_spark.operators.compact import compact
 
-            out = compact(t, ledger, job_id, target_bytes=target,
-                          concurrency=cfg["concurrency"])
+            out = compact(t, ledger, job_id, target_bytes=target)
         elif args.cmd == "cluster":
             from open_finance_lakehouse_spark.operators.cluster import (
                 cluster_global,

@@ -270,7 +270,9 @@ def write_metadata_exclusive(meta: TableMetadata, version: int) -> str:
     degraded-but-still-CAS fallback: claim the version name with O_EXCL
     (losers still get FileExistsError), then atomically swap the fsync'd
     content in with ``os.replace``; readers that hit the sub-millisecond
-    claim→replace window retry (``read_current_metadata``)."""
+    claim→replace window retry (``read_current_metadata``). A writer whose
+    claim was recovered as dead meanwhile no longer owns the path's inode
+    and raises FileExistsError instead of replacing."""
     d = metadata_dir(meta.location)
     os.makedirs(d, exist_ok=True)
     path = os.path.join(d, f"v{version}.metadata.json")
@@ -290,7 +292,22 @@ def write_metadata_exclusive(meta: TableMetadata, version: int) -> str:
         except FileExistsError:
             os.unlink(tmp)
             raise
-        os.close(fd)
+        try:
+            # a stall past DEAD_CLAIM_AGE_MS lets a reader recover this
+            # (still empty) claim and another committer take the version:
+            # replacing then would overwrite that commit, so the claim
+            # must still be ours — same inode at the path — or we lost
+            try:
+                ours = os.fstat(fd).st_ino == os.stat(path).st_ino
+            except FileNotFoundError:
+                ours = False
+        finally:
+            os.close(fd)
+        if not ours:
+            os.unlink(tmp)
+            raise FileExistsError(
+                f"claim on {path} was recovered by a reader (writer "
+                "stalled past the dead-claim age)")
         try:
             os.replace(tmp, path)  # consumes tmp
         except OSError:

@@ -9,9 +9,10 @@ architecture, SURVEY.md §4).
 Scale notes (100 TB / 1000 executors):
 - manifests are Parquet and reused across commits untouched-partition-wise,
   so a commit is O(files touched), not O(files total);
-- ``files_df`` exposes the file inventory as a Spark DataFrame so planners
-  prune distributedly instead of driver-materializing millions of entries
-  (``plan_files`` is the driver-side convenience for sandbox scale);
+- maintenance planners read the file inventory on the driver
+  (``live_files`` / ``plan_files``: a manifest read, no Spark job);
+  ``files_df`` exposes the same inventory as a Spark DataFrame for the
+  SQL metadata views;
 - scans pass explicit file lists to the Parquet reader — Catalyst still
   applies row-group pushdown and column pruning inside each file.
 """

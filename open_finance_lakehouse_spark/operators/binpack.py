@@ -13,11 +13,9 @@ new bin. Bins holding fewer than ``min_files_per_bin`` files are discarded
 (rewriting one small file buys nothing). Deterministic given the input list:
 ties sort by path.
 
-Scale note: the planner is O(candidates · bins) per partition, driver-side —
-fine even at millions of files because it runs per partition and the
-candidate lists arrive partition-bucketed (the cluster-scale path computes
-the same grouping distributedly over ``files_df`` and runs this per
-partition group).
+Scale note: the planner is O(candidates · bins) per partition, driver-side;
+``compact.plan_compaction`` groups ``live_files()`` by partition and runs
+it once per group.
 """
 
 from __future__ import annotations

@@ -4,10 +4,10 @@ Replaces the reference's proprietary ``OPTIMIZE ... ZORDER BY (series_id,
 date)`` (``ofl/transform/spark/silver.py``) with one explicit whole-table
 Spark plan, ``cluster_global``:
 
-  plan: ONE grouped collect over the manifest relation — per partition,
-        its sorted path list, byte/record totals and the curve axes'
-        min/max (input fingerprint, row cap and curve bounds all derive
-        from those rows on the driver)
+  plan: on the driver over ``live_files()`` (no Spark job) — per
+        partition, its sorted path list and byte/record totals, plus the
+        curve axes' manifest min/max (input fingerprint, row cap and
+        curve bounds all derive from those)
   scan the planned snapshot
     → curve key via vectorized Arrow UDF (``functions.curves`` — the only
       Python in the plan, batch-vectorized)
@@ -32,8 +32,6 @@ from __future__ import annotations
 
 import math
 import time
-
-from pyspark.sql import functions as F
 
 from open_finance_lakehouse_spark.format.table import CommitConflict, LakeTable
 from open_finance_lakehouse_spark.functions.curves import (
@@ -87,36 +85,25 @@ def cluster_global(
     in the ledger. Equivalent to the reference's single table-wide
     ``OPTIMIZE ... ZORDER BY`` call.
 
-    Planning is ONE grouped collect over the manifest relation: per
-    partition, its sorted path list, byte/record totals and the curve
-    axes' min/max. The driver derives everything else from those
-    O(partitions) rows — the input fingerprint, the output row cap, the
-    curve normalization bounds and the file-grain lineage inputs."""
+    Planning runs on the driver over ``live_files()`` (no Spark job):
+    per partition, its sorted path list and byte/record totals, plus the
+    curve axes' manifest min/max. Everything else derives from those —
+    the input fingerprint, the output row cap, the curve normalization
+    bounds and the file-grain lineage inputs."""
     # plan against the CURRENT head, not whatever snapshot this handle
     # last saw: a stale plan's removal set conflicts on commit (correct but
     # wasted work), and a retried run would re-conflict forever
     table.refresh()
-    bound_cols = []
-    for c in CLIP_DIM_BOUNDS:
-        bound_cols += [
-            F.min(F.element_at("min_long", F.lit(c))).alias(f"lo_{c}"),
-            F.max(F.element_at("max_long", F.lit(c))).alias(f"hi_{c}")]
-    part_rows = (
-        table.files_df().groupBy("partition")
-        .agg(F.sum("file_size_bytes").alias("pb"),
-             F.sum("record_count").alias("pr"),
-             F.sort_array(F.collect_list("file_path")).alias("ps"),
-             *bound_cols)
-        .collect()
-    )
-    by_part: dict[str, list[str]] = {
-        r["partition"]: list(r["ps"]) for r in part_rows}
-    paths = [p for ps in by_part.values() for p in ps]
-    bytes_in = sum(int(r["pb"]) for r in part_rows)
-    records_in = sum(int(r["pr"]) for r in part_rows)
+    files = table.live_files()
+    by_part: dict[str, list] = {}
+    for f in files:
+        by_part.setdefault(f.partition, []).append(f)
+    paths = [f.file_path for f in files]
+    bytes_in = sum(f.file_size_bytes for f in files)
+    records_in = sum(f.record_count for f in files)
     totals = {
         "job_id": job_id, "operation": f"cluster_global[{curve}]",
-        "partitions_planned": len(part_rows),
+        "partitions_planned": len(by_part),
         "partitions_rewritten": 0, "partitions_skipped": 0,
         "files_in": len(paths), "files_out": 0, "bytes_in": bytes_in,
         "bytes_out": 0, "rows": 0, "engine_ms": 0,
@@ -140,8 +127,8 @@ def cluster_global(
     # dimensions with constant high bits and no sort influence
     bounds = dict(CLIP_DIM_BOUNDS)
     for c in CLIP_DIM_BOUNDS:
-        los = [r[f"lo_{c}"] for r in part_rows if r[f"lo_{c}"] is not None]
-        his = [r[f"hi_{c}"] for r in part_rows if r[f"hi_{c}"] is not None]
+        los = [f.min_long[c] for f in files if c in f.min_long]
+        his = [f.max_long[c] for f in files if c in f.max_long]
         if los:
             lo, hi = float(min(los)), float(max(his))
             bounds[c] = (lo, hi if hi > lo else lo + 1.0)
@@ -156,8 +143,10 @@ def cluster_global(
     # partition with 2×-wide rows (codec/duration mix) emit 2×-target
     # files while narrow partitions emit half-size ones
     rpf = min(
-        (binpack.records_per_file(int(r["pb"]), int(r["pr"]), target_bytes)
-         for r in part_rows if r["pr"]),
+        (binpack.records_per_file(sum(f.file_size_bytes for f in fs),
+                                  sum(f.record_count for f in fs),
+                                  target_bytes)
+         for fs in by_part.values() if any(f.record_count for f in fs)),
         default=binpack.records_per_file(bytes_in, records_in, target_bytes),
     )
     # read the planned snapshot through the format's one scan seam (pinned
@@ -227,7 +216,9 @@ def cluster_global(
     # inputs would make the log O(partitions × files) and provenance
     # queries useless
     for part, outs in sorted(by_out.items()):
-        ledger.append_lineage(job_id, f"part={part}", by_part.get(part, []),
+        ledger.append_lineage(job_id, f"part={part}",
+                              sorted(f.file_path
+                                     for f in by_part.get(part, [])),
                               [a.file_path for a in outs], "cluster")
     ledger.upsert(CheckpointRecord(
         job_id=job_id, table=table.meta.name, partition_id="__table__",

@@ -4,25 +4,25 @@ The reference compacts with one proprietary SQL call
 (``OPTIMIZE delta.`uri``` — /root/reference/ofl/transform/spark/silver.py:368-371);
 we build the whole mechanism: a driver-side planner over the snapshot's file
 inventory (SURVEY.md §4: "a maintenance engine's optimizer is a driver-side
-metadata planner plus ordinary Catalyst execution"), per-partition rewrite
-tasks that move bytes exactly once (read → write, no extra exchange — the
-binary audio payload dominates IO, SURVEY.md §7.3), and per-partition
-checkpointed commits so an interrupted job resumes at file granularity.
+metadata planner plus ordinary Catalyst execution"), one rewrite job that
+moves bytes exactly once (read → write, no exchange — the binary audio
+payload dominates IO, SURVEY.md §7.3), and one atomic commit.
 
 Row-preservation contract: compaction re-writes bytes verbatim — scans over
 the compacted snapshot return byte-identical row sets (verified by
 ``operators.audit.scan_parity``) and decoded-PCM SNR is untouched.
 
-Execution shape per partition:
-  1. fingerprint the partition's bin inputs; skip if the ledger says
-     ``committed`` with the same fingerprint (idempotent replay);
-  2. read ONLY the binned files (explicit path list — no shuffle: the write
-     re-packs via ``maxRecordsPerFile`` on the scan's natural partitions,
-     and ``coalesce`` caps tiny-task overhead without an exchange);
-  3. stage output files + footer stats, commit a rewrite snapshot that
-     removes exactly the binned files (snapshot isolation: concurrent
-     readers of the old snapshot still see the old files);
-  4. write checkpoint + lineage records with task-measured engine_ms.
+Execution shape:
+  1. plan bins per partition on the driver over ``live_files()`` with the
+     unit-tested ``binpack.plan_bins``; skip partitions whose ``part=<p>``
+     ledger record is committed for the same input fingerprint;
+  2. read ONLY the binned files, one frame per partition, each coalesced
+     to its own output count and tagged with a literal ``__part``; the
+     union stages as ONE write job routed by that column (no shuffle);
+  3. ONE ``commit_rewrite`` removes every binned file (snapshot isolation:
+     concurrent readers of the old snapshot still see the old files); on a
+     conflict the whole job surrenders and nothing lands;
+  4. per-partition checkpoint + lineage records.
 """
 
 from __future__ import annotations
@@ -30,13 +30,11 @@ from __future__ import annotations
 import math
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_PARTITION_CONCURRENCY = 8
-
-from open_finance_lakehouse_spark.format import manifests as mf
 from open_finance_lakehouse_spark.format.table import CommitConflict, LakeTable
 from open_finance_lakehouse_spark.operators import binpack
 from open_finance_lakehouse_spark.plans.ledger import (
@@ -55,126 +53,19 @@ def plan_compaction(
     small_file_ratio: float = binpack.DEFAULT_SMALL_FILE_RATIO,
     min_files_per_bin: int = 2,
 ) -> dict[str, list[binpack.Bin]]:
-    """Partition → rewrite bins, planned DISTRIBUTEDLY over ``files_df``.
-
-    The manifest parquet is the input relation: the small-file threshold
-    filters Spark-side (so well-sized files never leave the scan), the FFD
-    binning runs per partition group inside ``applyInPandas``, and the
-    driver collects ONLY the bins that need rewriting — never the full file
-    inventory (the 100 TB path; VERDICT r1 'route planners through
-    files_df'). The binning arithmetic stays the unit-tested
-    ``binpack.plan_bins``."""
-    import pandas as pd
-
-    threshold = int(target_bytes * small_file_ratio)
-    inv = (
-        table.files_df()
-        .select("partition", "file_path", "file_size_bytes", "record_count")
-        .filter(F.col("file_size_bytes") < threshold)
-    )
-    out_cols = ["partition", "bin_id", "file_path", "file_size_bytes",
-                "record_count"]
-
-    def _plan(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = pdf["partition"].iloc[0]
-        files = list(zip(pdf["file_path"], pdf["file_size_bytes"].astype(int),
-                         pdf["record_count"].astype(int)))
+    """Partition → rewrite bins, planned on the driver over ``live_files()``
+    (a manifest read, no Spark job). Partitions without a bin are absent."""
+    by_part: dict[str, list[tuple[str, int, int]]] = {}
+    for f in table.live_files():
+        by_part.setdefault(f.partition, []).append(
+            (f.file_path, f.file_size_bytes, f.record_count))
+    plan: dict[str, list[binpack.Bin]] = {}
+    for part, files in sorted(by_part.items()):
         bins = binpack.plan_bins(files, target_bytes, small_file_ratio,
                                  min_files_per_bin)
-        info = {p: (int(s), int(r)) for p, s, r in files}
-        rows = [
-            (part, i, p, info[p][0], info[p][1])
-            for i, b in enumerate(bins) for p in b.paths
-        ]
-        return pd.DataFrame(rows, columns=out_cols)
-
-    planned = (
-        inv.groupBy("partition")
-        .applyInPandas(_plan, ("partition string, bin_id int, "
-                               "file_path string, file_size_bytes long, "
-                               "record_count long"))
-        .collect()
-    )
-    plan: dict[str, list[binpack.Bin]] = {}
-    staged: dict[tuple[str, int], binpack.Bin] = {}
-    for r in sorted(planned, key=lambda r: (r["partition"], r["bin_id"],
-                                            r["file_path"])):
-        b = staged.setdefault((r["partition"], r["bin_id"]), binpack.Bin())
-        b.add(r["file_path"], r["file_size_bytes"], r["record_count"])
-    for (part, _bin_id), b in sorted(staged.items()):
-        plan.setdefault(part, []).append(b)
+        if bins:
+            plan[part] = bins
     return plan
-
-
-def _compact_partition(table, ledger, job_id, part, bins, target_bytes):
-    """One partition's rewrite — runs on a driver worker thread; Spark jobs
-    from concurrent partitions interleave on the cluster (FAIR scheduler).
-    Returns per-partition metrics, or None if skipped via the ledger."""
-    all_paths = [p for b in bins for p in b.paths]
-    fingerprint = file_set_hash(all_paths)
-    part_id = f"part={part}"
-    if ledger.is_committed(job_id, part_id, fingerprint):
-        return None
-
-    t0 = time.monotonic()
-    bytes_in = sum(b.total_bytes for b in bins)
-    records_in = sum(b.total_records for b in bins)
-    ledger.upsert(CheckpointRecord(
-        job_id=job_id, table=table.meta.name, partition_id=part_id,
-        file_set_hash=fingerprint, status=STATUS_REWRITING,
-        files_in=len(all_paths), bytes_in=bytes_in,
-    ))
-
-    paths = [os.path.join(table.location, p) for p in all_paths]
-    df = table.spark.read.schema(table._empty_df().schema).parquet(*paths)
-    rpf = binpack.records_per_file(bytes_in, records_in, target_bytes)
-    n_out = max(1, math.ceil(records_in / rpf))
-    added = table.stage_dataframe(
-        df.coalesce(n_out),
-        max_records_per_file=rpf,
-        repartition_by_partition=False,
-        fixed_partition=part,  # rows already in this partition: plain write
-    )
-    try:
-        snap = table.commit_rewrite(
-            set(all_paths), added, operation="compact",
-            summary={"job_id": job_id, "partition": part},
-        )
-    except CommitConflict:
-        # a concurrent writer (MERGE, another compact job, a replace) took
-        # some of this bin's files out of the live set between planning and
-        # commit. Snapshot isolation held — the table is untouched — so
-        # surrender THIS partition (partial progress, Iceberg
-        # RewriteDataFiles discipline): discard its staged output instead
-        # of orphaning it until GC, record the conflict, and let the other
-        # partitions proceed. The next run replans against the new head
-        # (the file-set fingerprint changed, so resume never skips it).
-        table._discard_staged(added, [])
-        ledger.upsert(CheckpointRecord(
-            job_id=job_id, table=table.meta.name, partition_id=part_id,
-            file_set_hash=fingerprint, status=STATUS_CONFLICTED,
-            files_in=len(all_paths), bytes_in=bytes_in,
-        ))
-        return {"conflicted": True}
-    engine_ms = int((time.monotonic() - t0) * 1000)
-
-    ledger.append_lineage(job_id, part_id, all_paths,
-                          [a.file_path for a in added], "compact")
-    ledger.upsert(CheckpointRecord(
-        job_id=job_id, table=table.meta.name, partition_id=part_id,
-        file_set_hash=fingerprint, status=STATUS_COMMITTED,
-        rows=sum(a.record_count for a in added),
-        bytes_in=bytes_in,
-        bytes_out=sum(a.file_size_bytes for a in added),
-        files_in=len(all_paths), files_out=len(added),
-        engine_ms=engine_ms, committed_snapshot_id=snap.snapshot_id,
-    ))
-    return {
-        "files_in": len(all_paths), "files_out": len(added),
-        "bytes_in": bytes_in,
-        "bytes_out": sum(a.file_size_bytes for a in added),
-        "rows": sum(a.record_count for a in added),
-    }
 
 
 def compact(
@@ -184,18 +75,14 @@ def compact(
     target_bytes: int = binpack.DEFAULT_TARGET_FILE_BYTES,
     small_file_ratio: float = binpack.DEFAULT_SMALL_FILE_RATIO,
     min_files_per_bin: int = 2,
-    max_bins_per_partition: int | None = None,
-    concurrency: int = DEFAULT_PARTITION_CONCURRENCY,
 ) -> dict:
     """Run compaction; returns job metrics. Safe to re-run: committed
     partitions with unchanged inputs are skipped (measured no-op).
 
-    Partitions execute CONCURRENTLY (driver thread pool): staging is
-    parallel Spark work, commits serialize briefly on the CAS loop. On a
-    multi-executor cluster this is what keeps all executors busy when
-    individual partitions are small. ``engine_ms`` is the wall time of the
-    execute phase (JVM/session startup excluded — the reference's
-    trigger-time discipline, /root/reference/ofl/streaming/metrics.py:53-62)."""
+    Every partition that needs work is rewritten by one write job and
+    lands in one snapshot. ``engine_ms`` is the wall time of the execute
+    phase (JVM/session startup excluded — the reference's trigger-time
+    discipline, ``ofl/streaming/metrics.py:53-62``)."""
     # plan against the CURRENT head: a stale handle's plan would remove
     # files a concurrent writer already rewrote — the commit conflicts
     # (correctly), but a replay from the same stale handle re-conflicts
@@ -210,35 +97,85 @@ def compact(
         "files_in": 0, "files_out": 0,
         "bytes_in": 0, "bytes_out": 0, "rows": 0, "engine_ms": 0,
     }
-    if not plan:
-        return totals
-    items = []
-    for part, bins in sorted(plan.items()):
-        if max_bins_per_partition is not None:
-            # (is not None, not truthiness: 0 means 'no bins this run' —
-            # a computed backpressure budget's floor — not 'unlimited')
-            # backpressure: bound work per task batch the way the reference
-            # bounds micro-batches (maxFilesPerTrigger,
-            # /root/reference/ofl/streaming/bronze.py:229-231)
-            bins = bins[:max_bins_per_partition]
-        items.append((part, bins))
-
-    t0 = time.monotonic()
-    with ThreadPoolExecutor(max_workers=min(concurrency, len(items))) as ex:
-        results = list(ex.map(
-            lambda it: _compact_partition(table, ledger, job_id, it[0], it[1],
-                                          target_bytes),
-            items,
-        ))
-    totals["engine_ms"] = int((time.monotonic() - t0) * 1000)
-    for res in results:
-        if res is None:
+    # part -> (input paths, fingerprint, bytes in, records in)
+    todo: dict[str, tuple[list[str], str, int, int]] = {}
+    for part, bins in plan.items():
+        paths = [p for b in bins for p in b.paths]
+        fingerprint = file_set_hash(paths)
+        if ledger.is_committed(job_id, f"part={part}", fingerprint):
             totals["partitions_skipped"] += 1
             continue
-        if res.get("conflicted"):
-            totals["partitions_conflicted"] += 1
-            continue
-        totals["partitions_rewritten"] += 1
-        for k, v in res.items():
-            totals[k] += v
+        todo[part] = (paths, fingerprint,
+                      sum(b.total_bytes for b in bins),
+                      sum(b.total_records for b in bins))
+    if not todo:
+        return totals
+
+    def record(part, status, **kw):
+        paths, fingerprint, bytes_in, _ = todo[part]
+        ledger.upsert(CheckpointRecord(
+            job_id=job_id, table=table.meta.name, partition_id=f"part={part}",
+            file_set_hash=fingerprint, status=status,
+            files_in=len(paths), bytes_in=bytes_in, **kw))
+
+    t0 = time.monotonic()
+    for part in todo:
+        record(part, STATUS_REWRITING)
+    # the row cap comes from the WIDEST-row partition so no output file
+    # exceeds target_bytes (maxRecordsPerFile is one value per write job)
+    rpf = min(binpack.records_per_file(b, r, target_bytes)
+              for _, _, b, r in todo.values())
+    ddl = table.meta.schema_ddl
+    frames = []
+    for part, (paths, _, _, records_in) in sorted(todo.items()):
+        df = table.spark.read.schema(ddl).parquet(
+            *[os.path.join(table.location, p) for p in paths])
+        # coalesce caps tiny-task overhead without an exchange; the
+        # literal __part routes the write with no shuffle either
+        frames.append(df.coalesce(max(1, math.ceil(records_in / rpf)))
+                      .withColumn("__part", F.lit(part)))
+    added = table.stage_dataframe(
+        reduce(DataFrame.union, frames),
+        max_records_per_file=rpf, repartition_by_partition=False,
+        partition_value=F.col("__part"))
+    removed = {p for paths, _, _, _ in todo.values() for p in paths}
+    try:
+        snap = table.commit_rewrite(
+            removed, added, operation="compact",
+            summary={"job_id": job_id, "partitions": len(todo)})
+    except CommitConflict:
+        # a concurrent writer (MERGE, another compact job, a replace) took
+        # some binned files out of the live set between planning and
+        # commit. Snapshot isolation held — the table is untouched — so
+        # the whole job surrenders like cluster_global: discard the staged
+        # output instead of orphaning it until GC, record the conflict,
+        # and let the next run replan against the new head (the ledger
+        # only skips STATUS_COMMITTED).
+        table._discard_staged(added, [])
+        for part in todo:
+            record(part, STATUS_CONFLICTED)
+        totals["partitions_conflicted"] = len(todo)
+        totals["engine_ms"] = int((time.monotonic() - t0) * 1000)
+        return totals
+    engine_ms = int((time.monotonic() - t0) * 1000)
+
+    by_out: dict[str, list] = {}
+    for a in added:
+        by_out.setdefault(a.partition, []).append(a)
+    for part in sorted(todo):
+        paths = todo[part][0]
+        outs = by_out.get(part, [])
+        ledger.append_lineage(job_id, f"part={part}", paths,
+                              [a.file_path for a in outs], "compact")
+        record(part, STATUS_COMMITTED,
+               rows=sum(a.record_count for a in outs),
+               bytes_out=sum(a.file_size_bytes for a in outs),
+               files_out=len(outs), engine_ms=engine_ms,
+               committed_snapshot_id=snap.snapshot_id)
+    totals.update(
+        partitions_rewritten=len(todo), files_in=len(removed),
+        files_out=len(added),
+        bytes_in=sum(b for _, _, b, _ in todo.values()),
+        bytes_out=sum(a.file_size_bytes for a in added),
+        rows=sum(a.record_count for a in added), engine_ms=engine_ms)
     return totals

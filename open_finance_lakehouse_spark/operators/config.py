@@ -26,14 +26,12 @@ MAINTENANCE_DEFAULTS: dict = {
     "curve": "zorder",          # zorder | hilbert | none
     "retain_last": 1,
     "gc_grace_ms": None,        # None -> operator default grace
-    "concurrency": 8,
     "snr_gate": "off",          # off | serial | overlap
     "parity_gate": False,
     "salt_count": None,         # None -> planner probes the source
 }
 
-_INT_KEYS = {"target_bytes", "retain_last", "gc_grace_ms", "concurrency",
-             "salt_count"}
+_INT_KEYS = {"target_bytes", "retain_last", "gc_grace_ms", "salt_count"}
 _BOOL_KEYS = {"parity_gate"}
 
 

@@ -9,17 +9,14 @@ command, not a dashboard safari.
 
 Everything is metadata-only (manifest parquet + snapshot log): no data
 bytes are read, so the doctor is safe to run on a 10^12-row table.  The
-file-level aggregates run DISTRIBUTEDLY over ``files_df`` (one Spark
-aggregate over the manifest relation — never a driver-side file loop);
-the snapshot log and ledger reads are O(snapshots)/O(records),
-driver-side by design.
+file-level aggregates are driver-side sums over the manifest entries
+(``live_files()``, no Spark job); the snapshot log and ledger reads are
+O(snapshots)/O(records), driver-side too.
 """
 
 from __future__ import annotations
 
 import time
-
-from pyspark.sql import functions as F
 
 from open_finance_lakehouse_spark.format.table import LakeTable
 from open_finance_lakehouse_spark.operators import binpack
@@ -41,17 +38,10 @@ def doctor(
     meta = table.meta
     small_threshold = int(target_bytes * binpack.DEFAULT_SMALL_FILE_RATIO)
 
-    # one distributed aggregate over the manifest relation
-    agg = table.files_df().agg(
-        F.count("*").alias("files"),
-        F.sum("file_size_bytes").alias("bytes"),
-        F.sum("record_count").alias("rows"),
-        F.sum((F.col("file_size_bytes") < small_threshold).cast("long"))
-         .alias("small_files"),
-        F.countDistinct("partition").alias("partitions"),
-        F.avg("file_size_bytes").alias("avg_file_bytes"),
-    ).first()
-    files = int(agg["files"] or 0)
+    live = table.live_files()
+    files = len(live)
+    total_bytes = sum(f.file_size_bytes for f in live)
+    small_files = sum(f.file_size_bytes < small_threshold for f in live)
 
     snaps = table.snapshots()
     cur = meta.current_snapshot_id
@@ -70,13 +60,14 @@ def doctor(
     signals = {
         "table": meta.name,
         "files": files,
-        "rows": int(agg["rows"] or 0),
-        "bytes": int(agg["bytes"] or 0),
-        "partitions": int(agg["partitions"] or 0),
-        "avg_file_mb": round((agg["avg_file_bytes"] or 0) / 1048576, 2),
-        "small_files": int(agg["small_files"] or 0),
-        "small_file_fraction": round(
-            (agg["small_files"] or 0) / files, 3) if files else 0.0,
+        "rows": sum(f.record_count for f in live),
+        "bytes": total_bytes,
+        "partitions": len({f.partition for f in live}),
+        "avg_file_mb": round(total_bytes / files / 1048576, 2) if files
+        else 0.0,
+        "small_files": small_files,
+        "small_file_fraction": round(small_files / files, 3) if files
+        else 0.0,
         "snapshots": len(snaps),
         "snapshots_off_ancestry": len(off_ancestry),
         "staged_pending": staged_pending,

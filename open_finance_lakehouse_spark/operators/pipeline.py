@@ -32,7 +32,6 @@ import time
 import uuid
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from open_finance_lakehouse_spark.format.table import LakeTable
 from open_finance_lakehouse_spark.operators import audit as audit_ops
@@ -56,7 +55,6 @@ def run_maintenance(
     with_audit: bool = True,
     spark_for_audit: SparkSession | None = None,
     subsume_compaction: bool = True,
-    concurrency=_UNSET,
     gc_grace_ms=_UNSET,
     snr_gate=_UNSET,
     parity_gate=_UNSET,
@@ -95,7 +93,6 @@ def run_maintenance(
     target_bytes = cfg["target_bytes"] if target_bytes is _UNSET else target_bytes
     curve = cfg["curve"] if curve is _UNSET else curve
     retain_last = cfg["retain_last"] if retain_last is _UNSET else retain_last
-    concurrency = cfg["concurrency"] if concurrency is _UNSET else concurrency
     gc_grace_ms = cfg["gc_grace_ms"] if gc_grace_ms is _UNSET else gc_grace_ms
     snr_gate = cfg["snr_gate"] if snr_gate is _UNSET else snr_gate
     parity_gate = cfg["parity_gate"] if parity_gate is _UNSET else parity_gate
@@ -109,11 +106,8 @@ def run_maintenance(
             "'serial'")
 
     job_id = job_id or f"maint-{uuid.uuid4().hex[:12]}"
-    # one Spark aggregate over the manifest relation — live_files() would
-    # driver-materialize a DataFile per file just to sum a counter
-    clip_count = int(
-        table.files_df().agg(F.coalesce(F.sum("record_count"), F.lit(0)))
-        .first()[0])
+    # manifest record counts: a driver-side sum, no Spark job
+    clip_count = sum(f.record_count for f in table.live_files())
     pre_snapshot = table.current_snapshot_id()
 
     t_start = time.monotonic()
@@ -138,8 +132,7 @@ def run_maintenance(
 
     if curve is None or not subsume_compaction:
         stages["compact"] = compact(
-            table, ledger, f"{job_id}/compact", target_bytes=target_bytes,
-            concurrency=concurrency)
+            table, ledger, f"{job_id}/compact", target_bytes=target_bytes)
     if curve is not None:
         stages["cluster"] = cluster_global(
             table, ledger, f"{job_id}/cluster", curve=curve,

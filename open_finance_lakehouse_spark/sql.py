@@ -1631,8 +1631,7 @@ def run_maintenance_sql(
             )
 
             return compact(table, ledger, jid,
-                           target_bytes=cfg["target_bytes"],
-                           concurrency=cfg["concurrency"])
+                           target_bytes=cfg["target_bytes"])
         cols = [c.strip() for c in m.group(2).split(",")]
         # SQL identifiers are case-insensitive — `ZORDER BY (DUR_MS, ...)`
         # is the same statement as the lowercase spelling

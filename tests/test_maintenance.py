@@ -725,24 +725,94 @@ def test_parity_catches_dropped_null_payload_row(spark):
         [("c-2", "bytes_mismatch")]
 
 
-def test_plan_compaction_uses_files_df_not_live_files(spark, tmp_path,
-                                                      monkeypatch):
-    """The planner must run off the distributed file inventory: live_files
-    (driver materialization) is forbidden in the planning path (r1 #4)."""
+def _spark_jobs(spark, fn):
+    """(fn(), ids of the Spark jobs it ran) — counted by job group, plus
+    jobs from threads that do not inherit the group."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group = "test-job-count"
+
+    def job_ids() -> set:
+        return (set(st.getJobIdsForGroup(group))
+                | set(st.getJobIdsForGroup(None)))
+
+    sc.setJobGroup(group, "job count")
+    try:
+        before = job_ids()
+        out = fn()
+        return out, job_ids() - before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_plan_compaction_runs_no_spark_job(spark, tmp_path):
+    """Compaction is planned on the driver from the manifests: no Spark
+    job, and every bin holds at least two files."""
     t = LakeTable.create(
-        spark, str(tmp_path / "clips_fdf"), "clips_fdf", CLIP_SCHEMA_DDL,
+        spark, str(tmp_path / "clips_plan"), "clips_plan", CLIP_SCHEMA_DDL,
         partition_spec={"kind": "bucket", "column": "clip_id",
                         "num_buckets": 2},
     )
     t.append(synth_clips(spark, 40, dur_max_ms=500), max_records_per_file=4)
+    plan, jobs = _spark_jobs(
+        spark, lambda: plan_compaction(t, target_bytes=4 * 1024 * 1024))
+    assert not jobs, f"{len(jobs)} Spark jobs to plan compaction"
+    assert len(plan) == 2
+    assert all(len(b.paths) >= 2 for bins in plan.values() for b in bins)
 
-    def boom(self, snapshot_id=None):
-        raise AssertionError("plan_compaction must not call live_files()")
 
-    monkeypatch.setattr(LakeTable, "live_files", boom)
-    plan = plan_compaction(t, target_bytes=4 * 1024 * 1024)
-    assert plan and all(len(b.paths) >= 2 for bins in plan.values()
-                        for b in bins)
+def test_maintenance_with_nothing_to_compact_runs_no_spark_job(
+        spark, tmp_path):
+    """Compaction-only maintenance on a table with one file per bucket
+    plans, counts clips and expires without a single Spark job."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "clips_idle"), "clips_idle", CLIP_SCHEMA_DDL,
+        partition_spec={"kind": "bucket", "column": "clip_id",
+                        "num_buckets": 2},
+    )
+    t.append(synth_clips(spark, 40, dur_max_ms=500))
+    led = CheckpointLedger(str(tmp_path / "led_idle"))
+    res, jobs = _spark_jobs(spark, lambda: run_maintenance(
+        t, led, curve=None, with_audit=False, gc_grace_ms=0))
+    assert not jobs, f"{len(jobs)} Spark jobs for idle maintenance"
+    assert res["clips"] == 40
+    assert res["stages"]["compact"]["partitions_planned"] == 0
+
+
+def test_compact_is_one_write_job_and_one_snapshot(spark, tmp_path):
+    """Compacting a 2-bucket small-file table reads every binned file in
+    one job, adds exactly one snapshot, keeps every output file within
+    target_bytes and leaves the (clip_id, bytes) multiset unchanged."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "clips_one"), "clips_one", CLIP_SCHEMA_DDL,
+        partition_spec={"kind": "bucket", "column": "clip_id",
+                        "num_buckets": 2},
+    )
+    t.append(synth_clips(spark, 60, dur_max_ms=500), max_records_per_file=4)
+    files_before = len(t.live_files())
+    # small enough that each bucket needs more than one output file
+    target = sum(f.file_size_bytes for f in t.live_files()) // 5
+
+    def rows():
+        return sorted((r["clip_id"], bytes(r["bytes"])) for r in
+                      t.refresh().scan().select("clip_id", "bytes")
+                      .collect())
+
+    before = rows()
+    snaps = len(t.snapshots())
+    res, jobs = _spark_jobs(spark, lambda: compact(
+        t, CheckpointLedger(str(tmp_path / "led_one")), "one-job",
+        target_bytes=target))
+    assert len(jobs) == 1, f"{len(jobs)} Spark jobs for one compaction"
+    assert res["partitions_rewritten"] == 2
+    assert len(t.snapshots()) == snaps + 1
+    assert t.meta.snapshot().operation == "compact"
+    live = t.live_files()
+    assert len(live) < files_before
+    assert res["files_out"] > 2  # the buckets were split, not one file each
+    assert all(f.file_size_bytes <= target for f in live)
+    assert rows() == before
 
 
 def test_distributed_orphan_gc(spark, tmp_path):
@@ -931,6 +1001,42 @@ def test_maintenance_config_rejects_unknown_keys(spark, tmp_path):
 
     with pytest.raises(ValueError, match="unknown maintenance keys"):
         maintenance_properties({"target_byte": 1})  # typo'd knob
+
+
+def test_retired_concurrency_property_loads_but_cannot_be_declared(
+        spark, tmp_path):
+    """``maintenance.concurrency`` is no longer a knob: a table whose
+    stored properties still carry it loads and maintains normally (the
+    key is ignored), and declaring it anew refuses as an unknown key."""
+    from open_finance_lakehouse_spark.operators.config import (
+        maintenance_config,
+        maintenance_properties,
+    )
+    from open_finance_lakehouse_spark.sql import run_alter
+
+    loc = str(tmp_path / "retired")
+    LakeTable.create(
+        spark, loc, "retired", CLIP_SCHEMA_DDL,
+        partition_spec={"kind": "bucket", "column": "clip_id",
+                        "num_buckets": 2},
+        properties={"maintenance.concurrency": 8,
+                    "maintenance.curve": "none"})
+    t = LakeTable.load(spark, loc)
+    t.append(synth_clips(spark, 40, dur_max_ms=400), max_records_per_file=4)
+    assert "concurrency" not in maintenance_config(t)
+    res = run_maintenance(t, CheckpointLedger(str(tmp_path / "led_ret")),
+                          with_audit=False, gc_grace_ms=0)
+    assert res["stages"]["compact"]["partitions_rewritten"] == 2
+    assert t.refresh().scan().count() == 40
+
+    with pytest.raises(ValueError, match="unknown maintenance keys"):
+        maintenance_properties({"concurrency": 8})
+    with pytest.raises(ValueError, match="unknown maintenance keys"):
+        LakeTable.create(spark, str(tmp_path / "retired2"), "retired2",
+                         CLIP_SCHEMA_DDL, maintenance={"concurrency": 8})
+    with pytest.raises(ValueError, match="unknown maintenance property"):
+        run_alter(spark, "ALTER TABLE retired SET TBLPROPERTIES "
+                  "('maintenance.concurrency'='8')", {"retired": t})
 
 
 def test_declared_salt_policy_skips_probe(spark, tmp_path, monkeypatch):
@@ -1271,12 +1377,11 @@ def test_merge_composite_key_crash_resume(spark, tmp_path, monkeypatch):
 
 def test_compact_surrenders_conflicted_partition_and_resumes(
         spark, tmp_path, monkeypatch):
-    """A concurrent rewrite landing between compact's plan and one
-    partition's commit must not abort the job, lose rows, or orphan the
-    surrendered partition's staged output: that partition counts as
-    conflicted, the others commit (partial progress — Iceberg
-    RewriteDataFiles discipline), and a re-run replans it against the new
-    head and converges."""
+    """A concurrent rewrite landing between compact's plan and its commit
+    must not lose rows or orphan staged output: the whole job surrenders
+    (every attempted partition counts as conflicted and nothing lands,
+    like cluster_global), and a re-run replans against the new head and
+    converges."""
     t = LakeTable.create(
         spark, str(tmp_path / "race1"), "race1", CLIP_SCHEMA_DDL,
         partition_spec={"kind": "bucket", "column": "clip_id",
@@ -1287,15 +1392,15 @@ def test_compact_surrenders_conflicted_partition_and_resumes(
     plan = plan_compaction(t)
     parts = sorted(plan)
     assert len(parts) == 2
-    victim_part = parts[1]  # planned but not yet committed at injection
+    victim_part = parts[1]
     victim = plan[victim_part][0].paths[0]
 
     real_commit = LakeTable.commit_rewrite
     state = {"injected": False}
 
     def inject(self, removed, added, *a, **kw):
-        # first commit (partition parts[0]): sneak a concurrent rewrite of
-        # one of parts[1]'s planned files through ANOTHER handle first
+        # before compact's one commit: sneak a concurrent rewrite of one
+        # of parts[1]'s planned files through ANOTHER handle
         if not state["injected"]:
             state["injected"] = True
             other = LakeTable.load(spark, t.location)
@@ -1309,19 +1414,22 @@ def test_compact_surrenders_conflicted_partition_and_resumes(
 
     monkeypatch.setattr(LakeTable, "commit_rewrite", inject)
     led = CheckpointLedger(str(tmp_path / "led_race1"))
-    res = compact(t, led, "race1-job", concurrency=1)
+    files_before = len(t.live_files())
+    res = compact(t, led, "race1-job")
     assert state["injected"]
-    assert res["partitions_conflicted"] == 1
-    assert res["partitions_rewritten"] == 1
-    assert t.refresh().scan().count() == n0  # row-preserving throughout
+    assert res["partitions_conflicted"] == res["partitions_planned"] == 2
+    assert res["partitions_rewritten"] == 0
+    # only the concurrent one-file rewrite landed
+    assert len(t.refresh().live_files()) == files_before
+    assert t.scan().count() == n0  # row-preserving throughout
     # surrendered staging (data files AND manifest litter) was actively
     # discarded, not left for GC's grace window
     assert t.delete_orphans(grace_ms=0, dry_run=True) == []
 
     monkeypatch.setattr(LakeTable, "commit_rewrite", real_commit)
-    res2 = compact(t, led, "race1-job", concurrency=1)
+    res2 = compact(t, led, "race1-job")
     assert res2["partitions_conflicted"] == 0
-    assert res2["partitions_rewritten"] >= 1  # the surrendered partition
+    assert res2["partitions_rewritten"] == 2
     assert t.refresh().scan().count() == n0
 
 
@@ -1357,7 +1465,7 @@ def test_merge_surrenders_to_concurrent_compact_then_replay_converges(
             injected["compacted"] = True
             other = LakeTable.load(spark, t.location)
             res_c = compact(other, CheckpointLedger(str(tmp_path / "led_c")),
-                            "race2-compact", concurrency=1)
+                            "race2-compact")
             assert res_c["partitions_rewritten"] == 2
         return real_commit(self, *a, **kw)
 

@@ -701,6 +701,63 @@ def test_metadata_write_falls_back_without_hard_links(spark, warehouse,
         md.write_metadata_exclusive(meta, meta.version)
 
 
+def test_stalled_fallback_writer_cannot_overwrite_recovered_version(
+        spark, warehouse, monkeypatch):
+    """No-hardlink fallback, writer stalled between its O_EXCL claim and
+    the content swap for longer than DEAD_CLAIM_AGE_MS: a reader recovers
+    the empty claim and a second committer takes the version. The stalled
+    writer must lose that race (FileExistsError) instead of replacing the
+    second writer's document; its commit loop then lands on top."""
+    import errno
+    import time
+
+    from open_finance_lakehouse_spark.format import metadata as md
+
+    t = make_table(spark, warehouse, "stalled")
+    t.append(kdf(spark, 0, 10))
+    contested = t.meta.version + 1
+
+    def no_link(src, dst, **kw):
+        raise OSError(errno.EOPNOTSUPP, "hard links not supported")
+
+    monkeypatch.setattr(os, "link", no_link)
+    real_open, real_write = os.open, md.write_metadata_exclusive
+    state = {"stalled": False}
+    lost: list[int] = []
+
+    def claim_then_stall(path, flags, *a, **kw):
+        fd = real_open(path, flags, *a, **kw)
+        if (flags & os.O_EXCL and not state["stalled"]
+                and os.fspath(path).endswith(".metadata.json")):
+            state["stalled"] = True
+            # the stall outlives the dead-claim age; a reader recovers the
+            # empty claim and another committer takes the version
+            old = time.time() - 2 * md.DEAD_CLAIM_AGE_MS / 1000
+            os.utime(path, (old, old))
+            md.read_current_metadata(t.location)
+            assert not os.path.exists(path)
+            LakeTable.load(spark, t.location).append(kdf(spark, 100, 105))
+        return fd
+
+    def spy(meta, version):
+        try:
+            return real_write(meta, version)
+        except FileExistsError:
+            lost.append(version)
+            raise
+
+    monkeypatch.setattr(os, "open", claim_then_stall)
+    monkeypatch.setattr(md, "write_metadata_exclusive", spy)
+    t.append(kdf(spark, 10, 20))
+
+    assert state["stalled"] and lost == [contested]
+    doc = md.read_current_metadata(t.location)
+    assert doc.version == contested + 1
+    assert t.refresh().scan().count() == 25  # no commit was lost
+    d = md.metadata_dir(t.location)
+    assert not [n for n in os.listdir(d) if n.startswith(".tmp-")]
+
+
 def test_commit_rewrite_manifests_semantics(spark, warehouse):
     """Manifest-granularity rewrite: removes whole manifests, preserves
     concurrently-added ones, and conflicts when a removed manifest is no

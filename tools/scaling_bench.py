@@ -78,16 +78,13 @@ else:
                     with_audit=False, snr_gate=gate, gc_grace_ms=0)
     t = LakeTable.load(spark, os.path.join(run_loc, "clips"))
     ledger = CheckpointLedger(os.path.join(run_loc, "ledger"))
-    # concurrency = partition count: every partition's rewrite is in flight,
-    # so the run's parallelism is bounded by CORES, not by the driver pool —
-    # the quantity the N-vs-4N comparison must expose.
     # The per-row decoded-PCM SNR gate (BASELINE.json invariant) runs INSIDE
     # the pipeline, OVERLAPPED with the rewrite: the CPU-bound audit soaks
     # the cores the IO-wall-bound rewrite leaves idle (FAIR scheduler), so
     # the measured blend scales like the engine, not the host's write wall.
     m = run_maintenance(t, ledger, job_id="scale-%d" % cpus,
                         target_bytes=8 * 1024 * 1024, with_audit=False,
-                        concurrency=32, snr_gate=gate, gc_grace_ms=0)
+                        snr_gate=gate, gc_grace_ms=0)
     if gate != "off":
         assert m["gates"].get("snr_violations") == 0, m["gates"]
     total_ms = m["engine_ms"]
