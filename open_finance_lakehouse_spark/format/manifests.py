@@ -108,10 +108,8 @@ def temporal_to_micros(v) -> int:
 def collect_file_stats(abs_path: str, rel_path: str, partition: str) -> DataFile:
     """Build a DataFile entry from one Parquet file's footer.
 
-    Driver-side footer read (O(KB) per file). At cluster scale the same
-    function runs inside ``mapInPandas`` over the staged-file list so stats
-    collection is distributed — the function itself is already
-    executor-safe (path in, plain dict out).
+    Footer read (O(KB) per file): ``stage_dataframe`` calls it on the
+    driver and the frost sink's write tasks on executors, once per file.
     """
     f = pq.ParquetFile(abs_path)
     md = f.metadata

@@ -2,23 +2,26 @@
 
 Responsibilities: staged Parquet writes, per-file stats, snapshot commits
 with optimistic concurrency, stats-pruned scans, time travel, snapshot
-expiry and orphan GC. All data movement is Spark DataFrame plans; all
-metadata is driver-side (the "optimizer is a driver-side metadata planner"
-architecture, SURVEY.md §4).
+expiry and orphan GC. Writes and large reads are Spark DataFrame plans;
+all metadata is driver-side (the "optimizer is a driver-side metadata
+planner" architecture, SURVEY.md §4):
 
-Scale notes (100 TB / 1000 executors):
 - manifests are Parquet and reused across commits untouched-partition-wise,
   so a commit is O(files touched), not O(files total);
-- maintenance planners read the file inventory on the driver
-  (``live_files`` / ``plan_files``: a manifest read, no Spark job);
-  ``files_df`` exposes the same inventory as a Spark DataFrame for the
-  SQL metadata views;
-- scans pass explicit file lists to the Parquet reader — Catalyst still
-  applies row-group pushdown and column pruning inside each file.
+- planning reads the file inventory on the driver (``live_files`` /
+  ``plan_files``: a manifest read, no Spark job); ``files_df`` exposes the
+  same inventory as a Spark DataFrame for the SQL metadata views;
+- a scan whose planned files sum to at most ``SMALL_READ_BYTES`` is read on
+  the driver with pyarrow and reaches Spark as a local relation (no Spark
+  job); larger scans pass explicit file lists to the Parquet reader, and
+  Catalyst applies row-group pushdown and column pruning inside each file;
+- each schema DDL is parsed into a ``StructType`` once per process
+  (``schema_struct``), so no plan pays an analyzer round trip for it.
 """
 
 from __future__ import annotations
 
+import copy
 import os
 import shutil
 import threading
@@ -28,9 +31,33 @@ from dataclasses import dataclass, replace as dc_replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from open_finance_lakehouse_spark.format import manifests as mf
 from open_finance_lakehouse_spark.format import metadata as md
+
+
+# a scan whose planned files sum to at most this many bytes is read on the
+# driver (``LakeTable.scan``); 8 MiB is the benchmark tables' target file
+# size, so a one-bucket point lookup qualifies and range or payload scans
+# over several files stay on Spark
+SMALL_READ_BYTES = 8 << 20
+
+# StructType per schema DDL. The analyzer round trip behind it (a Py4J
+# ``createDataFrame([], ddl)``, ~20 ms) used to run on every bucket-pruned
+# plan, append and merge. A DDL string parses to the same types as long as
+# ``spark.sql.timestampType`` stays at its default, which the engine never
+# changes; an evolved schema is a new key.
+_STRUCTS: dict[str, StructType] = {}
+
+
+def schema_struct(spark: SparkSession, ddl: str) -> StructType:
+    """The ``StructType`` Spark's analyzer gives ``ddl``, parsed once per
+    process. Returns a copy: callers may ``add`` to what they get."""
+    struct = _STRUCTS.get(ddl)
+    if struct is None:
+        struct = _STRUCTS[ddl] = spark.createDataFrame([], ddl).schema
+    return copy.deepcopy(struct)
 
 
 class CommitConflict(Exception):
@@ -203,14 +230,64 @@ class ColumnRange:
         return cond
 
 
+def _arrow_literal_ok(v, typ) -> bool:
+    """Whether Arrow can compare ``v`` with a ``typ`` column exactly as
+    Spark does: an int literal within an integer column's range, or a str
+    literal on a string column (both compare bytes of UTF-8)."""
+    import pyarrow as pa
+
+    if pa.types.is_integer(typ):
+        ok = isinstance(v, int) and not isinstance(v, bool)
+    else:
+        ok = isinstance(v, str) and (pa.types.is_string(typ)
+                                     or pa.types.is_large_string(typ))
+    if not ok:
+        return False
+    try:
+        pa.scalar(v, typ)
+    except (OverflowError, ValueError, TypeError):
+        return False  # outside the column type's range, or not encodable
+    return True
+
+
+def _arrow_prefilter(tab, predicates: list[ColumnRange]):
+    """Drop the rows an integer or string IN-list or bound provably
+    rejects. Only a pre-filter: ``to_spark_filter`` runs above it and
+    defines the result, so nulls are kept here, and a null test, a
+    predicate on any other type, or a literal ``_arrow_literal_ok``
+    refuses keeps every row."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keep = None
+    for p in predicates:
+        if p.null_test is not None or p.column not in tab.column_names:
+            continue
+        col = tab.column(p.column)
+        lits = [v for v in (p.values if p.values is not None
+                            else (p.lo, p.hi)) if v is not None]
+        if not all(_arrow_literal_ok(v, col.type) for v in lits):
+            continue
+        if p.values is not None:
+            hits = [pc.is_in(col, value_set=pa.array(lits, col.type))]
+        else:
+            hits = [cmp(col, pa.scalar(v, col.type))
+                    for cmp, v in ((pc.greater_equal, p.lo),
+                                   (pc.less_equal, p.hi)) if v is not None]
+        for hit in hits:
+            hit = pc.or_kleene(hit, pc.is_null(col))
+            keep = hit if keep is None else pc.and_(keep, hit)
+    return tab if keep is None else tab.filter(keep)
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, location: str, meta: md.TableMetadata):
         self.spark = spark
         self.location = location
         self.meta = meta
-        # serializes this handle's commit section: concurrent partition
-        # rewrites stage in parallel (Spark jobs), commits queue briefly —
-        # commits are O(ms) metadata ops, staging is the parallel work
+        # serializes commits from threads sharing this handle, so they
+        # queue instead of losing CAS races to each other; commits are
+        # O(ms) metadata ops
         self._commit_lock = threading.Lock()
 
     # ------------------------------------------------------------------ init
@@ -378,10 +455,8 @@ class LakeTable:
             return files
         from open_finance_lakehouse_spark.functions.xxh64 import buckets_for
 
-        dtype = dict(
-            (f.name, f.dataType.simpleString())
-            for f in self._empty_df().schema.fields
-        ).get(col)
+        dtype = {f.name: f.dataType.simpleString()
+                 for f in self.schema().fields}.get(col)
         buckets = buckets_for(cand, dtype, int(spec["num_buckets"]))
         if buckets is None:  # mis-typed literal: hashing would mis-prune
             return files
@@ -389,8 +464,20 @@ class LakeTable:
 
     # ---------------------------------------------------------------- scans
 
+    def schema(self, snapshot_id: int | None = None) -> StructType:
+        """The read schema (``schema_struct``, no analyzer round trip).
+        Current reads use the CURRENT schema, so evolution applies at
+        once; explicit time travel uses the target snapshot's commit-time
+        schema."""
+        snap = self.meta.snapshot(snapshot_id)
+        if snapshot_id is None or snap is None or not snap.schema_ddl:
+            return schema_struct(self.spark, self.meta.schema_ddl)
+        return schema_struct(self.spark, snap.schema_ddl)
+
     def _empty_df(self) -> DataFrame:
-        return self.spark.createDataFrame([], self.meta.schema_ddl)
+        """An empty frame of the current schema, built from the cached
+        struct; schema-only callers read ``schema()`` instead."""
+        return self.spark.createDataFrame([], self.schema())
 
     def scan(
         self,
@@ -399,30 +486,51 @@ class LakeTable:
         with_file_path: bool = False,
     ) -> DataFrame:
         """Read the table at a snapshot; manifest stats prune whole files,
-        Catalyst pushes the residual predicate into surviving files.
+        and ``ColumnRange.to_spark_filter`` selects the rows of the files
+        that survive.
 
-        The read schema is the SNAPSHOT's schema (schema-per-snapshot time
-        travel): after ``update_schema`` added or widened columns, files
-        written under the old schema project missing columns as NULL and
-        upcast widened ones — both done natively by the parquet reader."""
-        snap = self.meta.snapshot(snapshot_id)
-        # current reads use the CURRENT schema (evolution applies at once);
-        # explicit time travel uses the target snapshot's commit-time schema
-        if snapshot_id is None or snap is None or not snap.schema_ddl:
-            ddl = self.meta.schema_ddl
-        else:
-            ddl = snap.schema_ddl
+        The read schema is the SNAPSHOT's schema (``schema``): after
+        ``update_schema`` added or widened columns, files written under the
+        old schema project missing columns as NULL and upcast widened ones.
+
+        A plan whose files sum to at most ``SMALL_READ_BYTES`` (without
+        ``with_file_path``) is read on the driver at ``scan()`` time, not
+        lazily: pyarrow reads the files, drops the rows an integer or
+        string predicate provably rejects, and Spark gets the rest as a
+        local relation, so collecting the result runs no Spark job.
+        Larger plans are a lazy Parquet scan of the planned files, where
+        Catalyst pushes the predicates into each file."""
+        struct = self.schema(snapshot_id)
         files, _ = self.plan_files(snapshot_id, predicates)
-        if not files:
-            df = self.spark.createDataFrame([], ddl)
+        if not with_file_path and \
+                sum(f.file_size_bytes for f in files) <= SMALL_READ_BYTES:
+            df = self._read_small(files, struct, predicates or [])
+        elif files:
+            df = self.spark.read.schema(struct).parquet(
+                *[os.path.join(self.location, f.file_path) for f in files])
         else:
-            paths = [os.path.join(self.location, f.file_path) for f in files]
-            df = self.spark.read.schema(ddl).parquet(*paths)
-            for p in predicates or []:
-                df = df.filter(p.to_spark_filter())
+            df = self.spark.createDataFrame([], struct)
+        for p in predicates or []:
+            df = df.filter(p.to_spark_filter())
         if with_file_path:
             df = df.withColumn("_file", F.input_file_name())
         return df
+
+    def _read_small(self, files: list, struct: StructType,
+                    predicates: list[ColumnRange]) -> DataFrame:
+        """The planned files as one driver-side Arrow table, pre-filtered,
+        handed to Spark without pandas."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from open_finance_lakehouse_spark.format.reader import read_file
+
+        schema = to_arrow_schema(struct)
+        tab = pa.concat_tables(
+            [read_file(os.path.join(self.location, f.file_path), schema)
+             for f in files]) if files else schema.empty_table()
+        return self.spark.createDataFrame(_arrow_prefilter(tab, predicates),
+                                          schema=struct)
 
     # ---------------------------------------------------------------- writes
 
@@ -521,9 +629,9 @@ class LakeTable:
     def _try_commit(self, build) -> md.Snapshot:
         """Optimistic-concurrency commit loop: read latest, build, CAS-write.
 
-        Thread-safe for concurrent partition rewrites on one handle (the
-        lock), and process-safe across writers (the O_EXCL version-file CAS
-        — a loser re-reads and revalidates)."""
+        Thread-safe for threads sharing one handle (the lock), and
+        process-safe across writers (the O_EXCL version-file CAS — a loser
+        re-reads and revalidates)."""
         import random
 
         with self._commit_lock:
@@ -824,7 +932,7 @@ class LakeTable:
         # write-schema conformance ALWAYS (Delta/Iceberg discipline, not
         # just on contract tables): a misnamed column would otherwise
         # commit fine and read back as all-NULL under the table schema
-        qc.check_schema(df, self._empty_df().schema)
+        qc.check_schema(df, self.schema())
         # the spec the rows are ROUTED under while staging; the commit is
         # conditional on it (rewrite_partitioning racing this append must
         # conflict, not land stale-routed files)
@@ -975,7 +1083,7 @@ class LakeTable:
         their files are GC-reachable; ``drop_staged`` abandons one."""
         from open_finance_lakehouse_spark.quality import contracts as qc
 
-        qc.check_schema(df, self._empty_df().schema)
+        qc.check_schema(df, self.schema())
         staged_spec = self.meta.partition_spec
         return self.commit_append(
             self.stage_dataframe(df, max_records_per_file), summary,
@@ -1034,10 +1142,10 @@ class LakeTable:
                 # or retyped in the current schema) conflicts; this
                 # matches the fast-forward path, which publishes
                 # pre-evolution files after an additive change too
-                cur = {f.name: f.dataType for f in self.spark
-                       .createDataFrame([], meta.schema_ddl).schema.fields}
-                stale = [f.name for f in self.spark
-                         .createDataFrame([], snap.schema_ddl).schema.fields
+                cur = {f.name: f.dataType for f in
+                       schema_struct(self.spark, meta.schema_ddl).fields}
+                stale = [f.name for f in
+                         schema_struct(self.spark, snap.schema_ddl).fields
                          if cur.get(f.name) != f.dataType]
                 if stale:
                     raise CommitConflict(
@@ -1463,12 +1571,10 @@ class LakeTable:
         """
 
         def build(meta: md.TableMetadata):
-            old = {f.name: f.dataType.simpleString()
-                   for f in self.spark.createDataFrame(
-                       [], meta.schema_ddl).schema.fields}
-            new = {f.name: f.dataType.simpleString()
-                   for f in self.spark.createDataFrame(
-                       [], new_ddl).schema.fields}
+            old = {f.name: f.dataType.simpleString() for f in
+                   schema_struct(self.spark, meta.schema_ddl).fields}
+            new = {f.name: f.dataType.simpleString() for f in
+                   schema_struct(self.spark, new_ddl).fields}
             _check_reserved(new)
             dropped = [c for c in old if c not in new]
             if dropped:
@@ -1523,9 +1629,9 @@ class LakeTable:
         Old snapshots keep time-traveling with their commit-time schema.
         """
         mapping = dict(mapping or {})
-        new_fields = self.spark.createDataFrame([], new_ddl).schema.fields
+        new_fields = schema_struct(self.spark, new_ddl).fields
         _check_reserved(f.name for f in new_fields)
-        old_fields = self._empty_df().schema.fields
+        old_fields = self.schema().fields
         old_names = [f.name for f in old_fields]
         old_types = {f.name: f.dataType.simpleString() for f in old_fields}
         unknown = [s for s in mapping.values() if s not in old_names]
@@ -1648,7 +1754,8 @@ class LakeTable:
         # the CHECK re-analysis below (this method runs twice per rewrite
         # — fail-fast and in-CAS — so duplicated createDataFrame calls
         # multiply)
-        probe = self.spark.createDataFrame([], new_ddl)
+        probe = self.spark.createDataFrame(
+            [], schema_struct(self.spark, new_ddl))
         new_names = {f.name for f in probe.schema.fields}
 
         def carry(col: str, rule: str) -> str:
@@ -1706,7 +1813,7 @@ class LakeTable:
                 raise ValueError(f"unknown partition spec {new_spec}")
             if int(new_spec.get("num_buckets", 0)) < 1:
                 raise ValueError("num_buckets must be >= 1")
-            names = [f.name for f in self._empty_df().schema.fields]
+            names = self.schema().names
             if new_spec.get("column") not in names:
                 raise ValueError(
                     f"bucket column {new_spec.get('column')!r} not in the "

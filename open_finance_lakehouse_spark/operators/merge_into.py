@@ -218,7 +218,7 @@ def merge_into(
             f"merge key {keys!r} must include the table's bucket-partition "
             f"column {part_col!r}: the partition-pruned merge plan only "
             "visits the key's own bucket")
-    schema = table._empty_df().schema
+    schema = table.schema()
     data_cols = schema.fieldNames()
     missing = [k for k in keys if k not in data_cols]
     if missing:

@@ -50,14 +50,15 @@ def publish_overwrite(
     # the same write gates every append enforces (a publish is a write):
     # a misnamed/mistyped candidate column would stage fine and read back
     # all-NULL under the table schema — published silent corruption
-    qc.check_schema(candidate, table._empty_df().schema)
+    schema = table.schema()
+    qc.check_schema(candidate, schema)
     contract = qc.Contract.from_properties(table.meta.properties)
     staged_spec = table.meta.partition_spec  # commit is conditional on it
     added = table.stage_dataframe(candidate,
                                   max_records_per_file=max_records_per_file)
     staged_paths = [os.path.join(table.location, a.file_path) for a in added]
     staged = (
-        table.spark.read.schema(table._empty_df().schema).parquet(*staged_paths)
+        table.spark.read.schema(schema).parquet(*staged_paths)
         if staged_paths else table._empty_df()
     )
 

@@ -88,7 +88,7 @@ def _update_once(
     t0 = time.monotonic()
     table.refresh()  # plan against the current head
     predicates = predicates or []
-    schema = {f.name: f.dataType for f in table._empty_df().schema.fields}
+    schema = {f.name: f.dataType for f in table.schema().fields}
     unknown = [c for c in set if c not in schema]
     if unknown:
         raise ValueError(f"SET columns not in table schema: {unknown}")

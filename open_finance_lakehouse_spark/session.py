@@ -99,7 +99,9 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # concurrent partition-rewrite jobs share the cluster fairly
+        # the overlapped SNR gate (run_maintenance, snr_gate="overlap")
+        # runs its audit job from a second thread beside the cluster
+        # rewrite; FAIR lets the two share the executors
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.caseSensitive", "true")

@@ -14,7 +14,9 @@ skip list so callers can gate on it), and ``run_sql`` is a thin
 Views are plain logical plans over ``LakeTable.scan`` — manifest-level
 pruning still applies through the scan's explicit file list, and Catalyst
 sees ordinary parquet relations, so predicate pushdown and column pruning
-work unchanged through the SQL surface.
+work unchanged through the SQL surface. A table of at most
+``SMALL_READ_BYTES`` is the exception: ``scan`` reads it on the driver
+when the view is registered, and the view is a local relation.
 """
 
 from __future__ import annotations
@@ -650,9 +652,9 @@ def run_merge(
         keys.append(pairs[t_alias])
     clauses = _merge_clauses(m.group(6))
 
-    data_cols = tgt._empty_df().columns
-    col_types = {f.name: f.dataType
-                 for f in tgt._empty_df().schema.fields}
+    tgt_schema = tgt.schema()
+    data_cols = tgt_schema.names
+    col_types = {f.name: f.dataType for f in tgt_schema.fields}
     # Spark resolves identifiers case-insensitively; canonicalize every
     # parsed column name to the target schema's spelling so the guards
     # below can't be bypassed by a case variant (SET day vs ON t.Day)
@@ -849,7 +851,7 @@ def run_insert(
     else:
         src = spark.sql(body)
 
-    fields = tgt._empty_df().schema.fields
+    fields = tgt.schema().fields
     data_cols = [f.name for f in fields]
     if col_list is not None:
         cols = [c.strip().strip("`") for c in col_list.split(",")]
@@ -1058,7 +1060,7 @@ def run_alter(
     tgt = tables[name]
     if not isinstance(tgt, LakeTable):
         tgt = LakeTable.load(spark, tgt)
-    fields = tgt._empty_df().schema.fields
+    fields = tgt.schema().fields
     cf = {f.name.lower(): f.name for f in fields}
 
     def ddl_of(parts: "list[tuple[str, str]]") -> str:
@@ -1790,7 +1792,7 @@ def run_maintenance_sql(
 
         cols = ",\n".join(
             f"  `{f.name}` {f.dataType.simpleString()}"
-            for f in table._empty_df().schema.fields)
+            for f in table.schema().fields)
         lines = [f"CREATE TABLE {table.meta.name} (", cols,
                  ") USING frost"]
         spec = table.meta.partition_spec

@@ -22,9 +22,9 @@ log (reference: silver streams from bronze inheriting exactly-once,
   interval (merge/replace/overwrite) raise: an append-only delta no longer
   exists and the consumer must recompute (Delta fails these the same way).
 
-Executor-side ``read`` is self-contained pyarrow (no engine import needed
-on workers) and yields Arrow record batches cast to the table schema —
-the vectorized path end to end.
+Executor-side ``read`` is pyarrow (``format.reader``, the same reader
+``LakeTable.scan`` uses for small reads) and yields Arrow record batches
+cast to the table schema — the vectorized path end to end.
 
 Batch reads additionally take part in FILTER PUSHDOWN
 (``spark.sql.python.filterPushdown.enabled``, pinned on by
@@ -63,33 +63,13 @@ class FrostFilePartition(InputPartition):
 
 
 def _read_file_batches(part: FrostFilePartition):
-    """Executor-side: one file → casted Arrow batches (pyarrow only).
+    """Executor-side: one file -> Arrow batches cast to the read schema
+    (``format.reader.read_file``, the reader ``LakeTable.scan`` shares).
+    The Python DataSource API has no column-pruning hook, so the pruning
+    rides on the user-supplied read schema."""
+    from open_finance_lakehouse_spark.format.reader import read_file
 
-    Reads ONLY the columns the read schema asks for (``columns=`` hits
-    parquet column-chunk granularity): a metadata-only query through
-    ``.schema("clip_id string, dur_ms int")`` never decodes the ~60 KB
-    ``bytes`` payload column — the Python DataSource API has no
-    column-pruning hook, so the pruning rides on the user-supplied read
-    schema instead."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(part.path)
-    avail = set(pf.schema_arrow.names)
-    want = [f.name for f in part.arrow_schema if f.name in avail]
-    table = pf.read(columns=want)
-    # project to the read schema's columns and cast (parquet files written
-    # under an older, narrower schema upcast here; missing columns become
-    # all-null arrays via the cast of a null-filled projection)
-    cols = []
-    for field in part.arrow_schema:
-        if field.name in table.column_names:
-            cols.append(table.column(field.name).cast(field.type))
-        else:
-            cols.append(pa.nulls(len(table), field.type))
-    for batch in pa.table(dict(zip(part.arrow_schema.names, cols)),
-                          schema=part.arrow_schema).to_batches():
-        yield batch
+    yield from read_file(part.path, part.arrow_schema).to_batches()
 
 
 # the canonical DDL parser lives in format/metadata.py (one parser, one

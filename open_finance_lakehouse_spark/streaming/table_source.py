@@ -149,7 +149,7 @@ def incremental_scan(
     if not files:
         return table._empty_df(), head, {"files": 0, "snapshots": len(delta)}
     paths = [os.path.join(table.location, f.file_path) for f in files]
-    df = table.spark.read.schema(table._empty_df().schema).parquet(*paths)
+    df = table.spark.read.schema(table.schema()).parquet(*paths)
     return df, head, {"files": len(files), "snapshots": len(delta),
                       "records": sum(f.record_count for f in files)}
 
@@ -273,7 +273,7 @@ class IncrementalSilver:
             # upstream updates and deletes propagate without the full
             # recompute this path used to force
             changes, head, info = incremental_changes(self.bronze, cursor)
-            delta = changes.select(self.bronze._empty_df().columns)
+            delta = changes.select(self.bronze.schema().names)
         if head == cursor:
             return {"query_id": self.query_id, "processed_rows": 0,
                     "delta_files": 0, "windows_recomputed": 0,
@@ -328,7 +328,7 @@ class IncrementalSilver:
             paths = [os.path.join(self.bronze.location, f.file_path)
                      for f in files]
             scoped = (
-                self.bronze.spark.read.schema(self.bronze._empty_df().schema)
+                self.bronze.spark.read.schema(self.bronze.schema())
                 .parquet(*paths) if paths else self.bronze._empty_df()
             )
             recomputed = build_minute_rollup(scoped, window=self.window) \
@@ -344,7 +344,7 @@ class IncrementalSilver:
                 spaths = [os.path.join(self.silver.location, p)
                           for p in sorted(touched)]
                 scoped_silver = (self.silver.spark.read
-                                 .schema(self.silver._empty_df().schema)
+                                 .schema(self.silver.schema())
                                  .parquet(*spaths))
                 survivors = scoped_silver.join(
                     F.broadcast(affected), ["window_start", "symbol"],

@@ -80,10 +80,14 @@ def test_aggregate_keeps_wholestage_codegen(spark):
     assert "*(" in final, f"no WholeStageCodegen stages in final plan:\n{final}"
 
 
-def test_maintenance_scan_prunes_with_manifest_stats(spark, tmp_path):
+def test_maintenance_scan_prunes_with_manifest_stats(spark, tmp_path,
+                                                    monkeypatch):
     """File-level pruning via manifest min/max must shrink the scan's input
     BEFORE Catalyst sees it (the planner's job), and the residual predicate
-    must still be pushed into the surviving files."""
+    must still be pushed into the surviving files of a Parquet scan (a
+    plan above ``SMALL_READ_BYTES``; this table's is read on the driver,
+    where there is no file scan to push into)."""
+    from open_finance_lakehouse_spark.format import table as table_mod
     from open_finance_lakehouse_spark.format.table import (
         ColumnRange,
         LakeTable,
@@ -95,6 +99,9 @@ def test_maintenance_scan_prunes_with_manifest_stats(spark, tmp_path):
             spark.range(lo, lo + 100).coalesce(1).select(
                 F.col("id").alias("k"), (F.col("id") * 1.0).alias("v")),
             max_records_per_file=None)
+    small = t.scan(predicates=[ColumnRange("k", lo=250, hi=260)])
+    assert sorted(r.k for r in small.collect()) == list(range(250, 261))
+    monkeypatch.setattr(table_mod, "SMALL_READ_BYTES", -1)
     pruned = t.scan(predicates=[ColumnRange("k", lo=250, hi=260)])
     plan = plan_of(pruned)
     assert "GreaterThanOrEqual(k,250)" in plan, plan  # residual pushed down
