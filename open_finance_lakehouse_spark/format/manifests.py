@@ -1,11 +1,8 @@
 """Manifests: Parquet files listing data files with per-file min/max stats.
 
-Why Parquet (not JSON): at 10^12-row scale a snapshot references millions of
-data files; manifests must themselves be scannable *distributedly*. Storing
-them as Parquet means the planner can load the ``.files`` metadata table as
-an ordinary Spark DataFrame (``LakeTable.files_df``) and prune with ordinary
-predicates — the same reason Apache Iceberg stores manifests in Avro. At
-sandbox scale the driver reads them with pyarrow directly.
+Why Parquet (not JSON): a manifest is a typed, columnar inventory that
+pyarrow reads in one call, with row counts in the footer. The driver-side
+planner (``format.plan``) reads them with pyarrow; no plan runs a Spark job.
 
 Per-file stats come from Parquet *footers* (row-group statistics merged per
 file) — no data scan needed. Stats cover every primitive non-binary column;

@@ -9,8 +9,8 @@ planner" architecture, SURVEY.md §4):
 - manifests are Parquet and reused across commits untouched-partition-wise,
   so a commit is O(files touched), not O(files total);
 - planning reads the file inventory on the driver (``live_files`` /
-  ``plan_files``: a manifest read, no Spark job); ``files_df`` exposes the
-  same inventory as a Spark DataFrame for the SQL metadata views;
+  ``plan_files``, both through ``format.plan``: a manifest read, no Spark
+  job);
 - a scan whose planned files sum to at most ``SMALL_READ_BYTES`` is read on
   the driver with pyarrow and reaches Spark as a local relation (no Spark
   job); larger scans pass explicit file lists to the Parquet reader, and
@@ -35,6 +35,7 @@ from pyspark.sql.types import StructType
 
 from open_finance_lakehouse_spark.format import manifests as mf
 from open_finance_lakehouse_spark.format import metadata as md
+from open_finance_lakehouse_spark.format import plan
 
 
 # a scan whose planned files sum to at most this many bytes is read on the
@@ -125,8 +126,8 @@ class ColumnRange:
     """Conjunctive predicate used for manifest-level file pruning: either a
     [lo, hi] range or an explicit IN-list (``values``).  An IN-list on the
     table's bucket-partition column additionally drives bucket-value
-    pruning (``plan_files``) — the hash router maps each literal straight
-    to its partition, which stats never can."""
+    pruning (``format.plan.plan_scan``) — the hash router maps each
+    literal straight to its partition, which stats never can."""
 
     column: str
     lo: object | None = None  # inclusive
@@ -343,45 +344,7 @@ class LakeTable:
     # ---------------------------------------------------------------- files
 
     def live_files(self, snapshot_id: int | None = None) -> list[mf.DataFile]:
-        snap = self.meta.snapshot(snapshot_id)
-        if snap is None:
-            return []
-        out: list[mf.DataFile] = []
-        for m in snap.manifests:
-            out.extend(mf.read_manifest(self.location, m))
-        return out
-
-    def live_file_count(self, snapshot_id: int | None = None) -> int:
-        """Exact live file count from manifest parquet FOOTERS — O(KB) per
-        manifest, no Spark job, no entry materialization. The correct
-        heuristic input for broadcast/distributed-path switches: snapshot
-        SUMMARY sums (added_files) undercount arbitrarily once expire has
-        dropped the append snapshots whose files are still live."""
-        import pyarrow.parquet as pq
-
-        snap = self.meta.snapshot(snapshot_id)
-        if snap is None:
-            return 0
-        return sum(
-            pq.ParquetFile(os.path.join(self.location, m)).metadata.num_rows
-            for m in snap.manifests)
-
-    def files_df(self, snapshot_id: int | None = None) -> DataFrame:
-        """The ``.files`` metadata table as a Spark DataFrame (distributed
-        planning path for cluster scale)."""
-        snap = self.meta.snapshot(snapshot_id)
-        paths = [os.path.join(self.location, m) for m in (snap.manifests if snap else [])]
-        if not paths:
-            return self.spark.createDataFrame(
-                [], "file_path string, partition string, record_count long, "
-                    "file_size_bytes long, "
-                    "min_long map<string,long>, max_long map<string,long>, "
-                    "min_double map<string,double>, "
-                    "max_double map<string,double>, "
-                    "min_string map<string,string>, "
-                    "max_string map<string,string>, "
-                    "null_count map<string,long>")
-        return self.spark.read.parquet(*paths)
+        return plan.live_files(self.meta, self.location, snapshot_id)
 
     def plan_files(
         self,
@@ -389,78 +352,20 @@ class LakeTable:
         predicates: list[ColumnRange] | None = None,
         files: "list[mf.DataFile] | None" = None,
     ) -> tuple[list[mf.DataFile], int]:
-        """Stats-pruned file planning. Returns (selected, total_live).
+        """Stats-pruned file planning (``format.plan.plan_scan``). Returns
+        (selected, total_live).
 
-        Equality/IN predicates on the bucket-partition column additionally
-        prune by PARTITION VALUE before stats run: ``pmod(xxhash64(v),
-        num_buckets)`` (numpy twin, ``functions/xxh64.py`` — bit-exact
-        with the routing writer) maps each literal to its bucket, cutting
-        a point lookup to 1/num_buckets of the live files.  Min/max stats
-        can't express this — hashing scatters the keyspace, so within any
-        one bucket the column's range spans ~everything.  Matches the
-        partition pruning the reference gets free from Delta's
-        ``partitionBy("source")``
+        Equality/IN predicates on the bucket-partition column also prune
+        by bucket value, cutting a point lookup to 1/num_buckets of the
+        live files — the partition pruning the reference gets from
+        Delta's ``partitionBy("source")``
         (/root/reference/ofl/transform/spark/silver.py:91).
 
         ``files``: pre-listed inventory (one ``live_files`` read shared
         across several pruning passes — disjunctive DML arms re-plan K
         times; without this each pass re-reads every manifest)."""
-        if files is None:
-            files = self.live_files(snapshot_id)
-        total = len(files)
-        if not predicates:
-            return files, total
-        null_preds = [p for p in predicates if p.null_test is not None]
-        predicates = [p for p in predicates if p.null_test is None]
-        if null_preds:
-            # IS [NOT] NULL tests prune by per-column null COUNTS (the
-            # same stats the DELETE metadata tier reads), never by bounds
-            files = [f for f in files
-                     if all(p.matches_nulls(f.nulls(p.column),
-                                            f.record_count)
-                            for p in null_preds)]
-        if not predicates:
-            return files, total
-        # bucket pruning is CURRENT-snapshot only: rewrite_partitioning is
-        # copy-on-write, so the head's files are always routed under the
-        # current spec — but a time-traveled snapshot may predate a spec
-        # flip and its files' routing is unknowable from current metadata
-        if snapshot_id is None or snapshot_id == self.meta.current_snapshot_id:
-            files = self._prune_buckets(files, predicates)
-        kept = [
-            f
-            for f in files
-            if all(p.overlaps(f.bounds(p.column)) for p in predicates)
-        ]
-        return kept, total
-
-    def _prune_buckets(self, files: list, predicates: list[ColumnRange]
-                       ) -> list:
-        spec = self.meta.partition_spec
-        if not spec or spec.get("kind") != "bucket" or not files:
-            return files
-        col = spec["column"]
-        cand: set | None = None  # conjunctive: intersect across predicates
-        for p in predicates:
-            if p.column != col:
-                continue
-            if p.values is not None:
-                vals = {v for v in p.values if v is not None}
-            elif p.lo is not None and p.lo == p.hi:
-                vals = {p.lo}
-            else:
-                continue
-            cand = vals if cand is None else cand & vals
-        if cand is None:
-            return files
-        from open_finance_lakehouse_spark.functions.xxh64 import buckets_for
-
-        dtype = {f.name: f.dataType.simpleString()
-                 for f in self.schema().fields}.get(col)
-        buckets = buckets_for(cand, dtype, int(spec["num_buckets"]))
-        if buckets is None:  # mis-typed literal: hashing would mis-prune
-            return files
-        return [f for f in files if f.partition in buckets]
+        return plan.plan_scan(self.meta, self.location, snapshot_id,
+                              predicates, files)
 
     # ---------------------------------------------------------------- scans
 
@@ -1326,7 +1231,6 @@ class LakeTable:
         return reach
 
     def delete_orphans(self, grace_ms: int = 0, dry_run: bool = False,
-                       distributed: "bool | str" = "auto",
                        exclude_snapshots: "set[int] | None" = None,
                        ) -> list[str]:
         """Delete data/manifest files unreachable from any live snapshot.
@@ -1337,50 +1241,25 @@ class LakeTable:
         reachability walk — used ONLY by dry runs to preview what a
         subsequent expire+GC would remove (a mutating call with it set
         would break snapshot isolation for readers of those snapshots,
-        so it is refused).
-
-        The DISTRIBUTED path lists per-partition directories as Spark
-        tasks, reads reachability from the manifest parquet as a relation,
-        and anti-joins on the cluster — the driver sees only the victims
-        (at millions of files a driver-side walk is the first thing to
-        fall over; VERDICT r1). ``"auto"`` (default) picks it when the
-        snapshot log suggests ≥10k files; tiny tables keep the
-        dependency-free walk (a Spark job costs more than walking a few
-        hundred entries)."""
+        so it is refused). Reachability and the listing are a walk on the
+        driver."""
         if exclude_snapshots and not dry_run:
             raise ValueError(
                 "exclude_snapshots is a dry-run-only preview knob; a "
                 "mutating GC that skipped live snapshots would delete "
                 "files their readers can still reach")
         self.refresh()
-        now = time.time()
-        if distributed == "auto":
-            # exact current-snapshot inventory from manifest footers —
-            # summary sums undercount once expire drops append snapshots
-            distributed = self.live_file_count() >= 10_000
-        if distributed:
-            victims = self._find_orphans_distributed(
-                grace_ms, now, exclude_snapshots)
-        else:
-            victims = self._find_orphans_walk(
-                grace_ms, now, exclude_snapshots)
+        victims = self._find_orphans_walk(grace_ms, time.time(),
+                                          exclude_snapshots)
         if not dry_run:
-            root = self.location
-
-            def _rm(rel: str) -> None:
+            for rel in victims:
                 # overlapping GCs (cron + manual) compute the same
                 # victims; losing the unlink race is success, not a
                 # reason to abort the rest of the sweep
                 try:
-                    os.remove(os.path.join(root, rel))
+                    os.remove(os.path.join(self.location, rel))
                 except FileNotFoundError:
                     pass
-
-            if distributed and len(victims) > 64:
-                self.spark.sparkContext.parallelize(victims, 32).foreach(_rm)
-            else:
-                for rel in victims:
-                    _rm(rel)
             # metadata/ .tmp-* litter from writers that died mid-commit
             # lives outside data/ — sweep it under the grace window, but
             # never below the dead-claim age: at grace 0 (tests/benches)
@@ -1438,64 +1317,6 @@ class LakeTable:
                         continue
                     victims.append(rel)
         return victims
-
-    def _find_orphans_distributed(self, grace_ms: int, now: float,
-                                  exclude_snapshots:
-                                  "set[int] | None" = None) -> list[str]:
-        """Spark-side orphan discovery: listing fans out one task per
-        partition directory (on a real deployment each task lists its shard
-        of the shared store), reachable data paths come from scanning the
-        manifest parquet, and the anti-join keeps everything but the
-        victims off the driver."""
-        sc = self.spark.sparkContext
-        location = self.location
-        skip = exclude_snapshots or ()
-        manifest_rels = sorted({m for s in self.meta.snapshots
-                                if s.snapshot_id not in skip
-                                for m in s.manifests})
-        dirs = [os.path.join("metadata", "manifests")]
-        data_base = os.path.join(location, "data")
-        if os.path.isdir(data_base):
-            dirs += [os.path.join("data", d) for d in os.listdir(data_base)]
-
-        def list_dir(rel_dir: str):
-            base = os.path.join(location, rel_dir)
-            out = []
-            try:
-                with os.scandir(base) as it:
-                    for e in it:
-                        if e.is_file():
-                            out.append((os.path.join(rel_dir, e.name),
-                                        e.stat().st_mtime))
-            except FileNotFoundError:
-                pass
-            except NotADirectoryError:
-                # a stray regular file under data/ — it IS a GC candidate
-                # (the walk path treats it as one); emit it as an entry
-                out.append((rel_dir, os.path.getmtime(base)))
-            return out
-
-        found = self.spark.createDataFrame(
-            sc.parallelize(dirs, max(1, min(len(dirs), 64)))
-              .flatMap(list_dir),
-            "path string, mtime double",
-        )
-        if manifest_rels:
-            reach_manifests = self.spark.createDataFrame(
-                [(m,) for m in manifest_rels], "path string")
-            reach_data = (
-                self.spark.read.parquet(
-                    *[os.path.join(location, m) for m in manifest_rels])
-                .select("file_path").toDF("path")
-            )
-            reachable = reach_manifests.union(reach_data)
-        else:
-            reachable = self.spark.createDataFrame([], "path string")
-        victims_df = found.join(reachable, "path", "left_anti")
-        if grace_ms:
-            cutoff = now - grace_ms / 1000.0
-            victims_df = victims_df.filter(F.col("mtime") < cutoff)
-        return [r["path"] for r in victims_df.select("path").collect()]
 
     def rollback(self, snapshot_id: int) -> md.Snapshot:
         """Point the table back at an earlier snapshot (Iceberg

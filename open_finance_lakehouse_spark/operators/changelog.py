@@ -20,11 +20,13 @@ Scale shape — cost ∝ CHANGE VOLUME, never O(table):
   parquet scan of exactly those files, no comparison work (this also covers
   ``merge_into``'s insert-only batches, which land as appends).
 - **Row-preserving maintenance** (compact / cluster / rewrite, including
-  partition-spec and schema rewrites, which relabel or re-route bytes but
-  change no logical row) contributes NOTHING and reads NOTHING — maintenance
-  stays invisible to CDC consumers, the same contract the incremental source
-  enforces via ``ROW_PRESERVING_OPS``. Those ops' own parity gates
-  (``operators/audit.scan_parity``) are what make the skip sound.
+  partition-spec rewrites, which re-route bytes but change no logical row)
+  contributes NOTHING and reads NOTHING — maintenance stays invisible to
+  CDC consumers, the same contract the incremental source keeps
+  (``format.plan.commit_kind``). Those ops' own parity gates
+  (``operators/audit.scan_parity``) are what make the skip sound. A schema
+  rewrite is skipped when it opens the interval and refused when rows
+  precede it: those rows cannot be read under the post-rewrite schema.
 - **Row-changing** commits (merge / replace / overwrite) diff ONLY the files
   the commit touched: added-minus-removed rows are inserts, removed-minus-
   added are deletes, via ``exceptAll`` (multiset semantics, so duplicate
@@ -45,13 +47,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from open_finance_lakehouse_spark.format import plan
 from open_finance_lakehouse_spark.format.metadata import Snapshot
 from open_finance_lakehouse_spark.format.table import LakeTable
-from open_finance_lakehouse_spark.streaming.table_source import (
-    ROW_PRESERVING_OPS,
-    ancestry_interval,
-    added_entries,
-)
 
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_SNAPSHOT_COL = "_commit_snapshot_id"
@@ -59,27 +57,6 @@ COMMIT_TIMESTAMP_COL = "_commit_timestamp_ms"
 
 INSERT = "insert"
 DELETE = "delete"
-
-
-def _is_row_preserving(snap: Snapshot) -> bool:
-    """Commits whose added files carry only rows the table already had.
-
-    ``rewrite_schema`` commits as ``replace`` and ``rewrite_partitioning``
-    as ``rewrite``, both flagged in the summary — a column rename/drop or a
-    re-bucket changes METADATA, not logical rows, so CDC skips them like
-    any other maintenance. ``expire`` never lands in the log (its marker is
-    unpersisted) but is listed defensively."""
-    if snap.operation in ROW_PRESERVING_OPS or snap.operation == "expire":
-        return True
-    summary = snap.summary or {}
-    return (summary.get("schema_rewrite") == "true"
-            or summary.get("partition_rewrite") == "true")
-
-
-def _live_paths(table: LakeTable, snapshot_id: int | None) -> set[str]:
-    if snapshot_id is None:
-        return set()  # genesis: the table had no files before its first commit
-    return {f.file_path for f in table.live_files(snapshot_id)}
 
 
 def table_changes(
@@ -100,18 +77,18 @@ def table_changes(
     meta = table.meta
     end_id = (to_snapshot_id if to_snapshot_id is not None
               else meta.current_snapshot_id)
-    chain = ancestry_interval(meta, from_snapshot_id, end_id)
+    units = plan.plan_changes(meta, table.location, from_snapshot_id, end_id)
 
     end_snap = meta.snapshot(end_id) if end_id is not None else None
     ddl = (end_snap.schema_ddl if end_snap is not None and end_snap.schema_ddl
            else meta.schema_ddl)
     spark = table.spark
 
-    def read(paths: list[str]) -> DataFrame:
+    def read(paths) -> DataFrame:
         if not paths:
             return spark.createDataFrame([], ddl)
         return spark.read.schema(ddl).parquet(
-            *[os.path.join(table.location, p) for p in sorted(paths)])
+            *[os.path.join(table.location, p) for p in paths])
 
     def stamp(df: DataFrame, change: str, snap: Snapshot) -> DataFrame:
         return df.select(
@@ -122,44 +99,14 @@ def table_changes(
         )
 
     parts: list[DataFrame] = []
-    # consecutive commits share a boundary: snapshot i's live set IS
-    # snapshot i+1's parent set — carry it forward instead of reading
-    # every manifest twice per row-changing commit
-    carried_id, carried = object(), None
-    for snap in chain:
-        if (snap.summary or {}).get("schema_rewrite") == "true":
-            if parts:
-                # rows committed BEFORE a rename/drop cannot be expressed
-                # in the post-rewrite schema: reading their files with the
-                # end DDL would silently project the renamed columns as
-                # NULL — corrupt change rows. The rewrite is row-changing
-                # to consumers by contract (rewrite_schema's docstring):
-                # refuse and make them recompute from a post-rewrite
-                # cursor.
-                raise ValueError(
-                    f"change interval crosses schema rewrite "
-                    f"{snap.snapshot_id}: rows committed before it cannot "
-                    "be read under the post-rewrite schema — restart the "
-                    f"consumer from snapshot {snap.snapshot_id} or later")
+    for u in units:
+        if u.kind == "insert":
+            parts.append(stamp(read(u.added), INSERT, u.snapshot))
             continue
-        if _is_row_preserving(snap):
-            continue
-        if snap.operation == "append":
-            files = added_entries(table.location, meta, snap)
-            if files:
-                parts.append(stamp(read([f.file_path for f in files]),
-                                   INSERT, snap))
-            continue
-        # generic row-changing commit: diff the live-file sets, then the
-        # rows — both sides bounded by what the commit actually touched
-        prev = (carried if carried_id == snap.parent_id
-                else _live_paths(table, snap.parent_id))
-        cur = _live_paths(table, snap.snapshot_id)
-        carried_id, carried = snap.snapshot_id, cur
-        added = read(list(cur - prev))
-        removed = read(list(prev - cur))
-        parts.append(stamp(added.exceptAll(removed), INSERT, snap))
-        parts.append(stamp(removed.exceptAll(added), DELETE, snap))
+        # a row-changing commit: diff the rows of only the files it touched
+        added, removed = read(u.added), read(u.removed)
+        parts.append(stamp(added.exceptAll(removed), INSERT, u.snapshot))
+        parts.append(stamp(removed.exceptAll(added), DELETE, u.snapshot))
 
     if not parts:
         empty = spark.createDataFrame([], ddl)

@@ -1713,17 +1713,8 @@ def run_maintenance_sql(
 
     m = re.fullmatch(rf"describe\s+detail\s+({_IDENT})", s, re.I)
     if m:
-        from pyspark.sql import functions as F
-
         table = resolve(m.group(1))
-        # inventory totals as Spark-side aggregates over the manifest
-        # relation — DESCRIBE DETAIL on a million-file table must not
-        # walk files on the driver
-        agg = (table.files_df()
-               .agg(F.count("*").alias("nf"),
-                    F.sum("file_size_bytes").alias("b"),
-                    F.sum("record_count").alias("r"))
-               .first())
+        files = table.live_files()
         spec = table.meta.partition_spec or {}
         return {
             "format": "frost",
@@ -1731,9 +1722,9 @@ def run_maintenance_sql(
             "location": table.location,
             "partition_spec": spec,
             "partition_columns": ([spec["column"]] if spec else []),
-            "num_files": int(agg["nf"] or 0),
-            "size_in_bytes": int(agg["b"] or 0),
-            "num_records": int(agg["r"] or 0),
+            "num_files": len(files),
+            "size_in_bytes": sum(f.file_size_bytes for f in files),
+            "num_records": sum(f.record_count for f in files),
             "current_snapshot_id": table.current_snapshot_id(),
             "num_snapshots": len(table.meta.snapshots),
             "schema": table.meta.schema_ddl,
@@ -1759,27 +1750,27 @@ def run_maintenance_sql(
 
     m = re.fullmatch(rf"show\s+partitions\s+({_IDENT})", s, re.I)
     if m:
-        from pyspark.sql import functions as F
-
         table = resolve(m.group(1))
         if not table.meta.partition_spec:
             raise ValueError(
                 f"SHOW PARTITIONS: table {table.meta.name} is not "
                 "partitioned")
-        # one grouped aggregate over the manifest relation — O(partitions)
-        # rows reach the driver, never O(files)
-        rows = (table.files_df()
-                .groupBy("partition")
-                .agg(F.count("*").alias("num_files"),
-                     F.sum("file_size_bytes").alias("size_in_bytes"),
-                     F.sum("record_count").alias("num_records"))
-                # bucket values are unpadded numeric STRINGS: a lexical
-                # sort reads '0','1','10','11',...,'2' past 9 buckets
-                .orderBy(F.col("partition").cast("int"), "partition")
-                .collect())
+        parts: dict[str, dict] = {}
+        for f in table.live_files():
+            p = parts.setdefault(f.partition, {
+                "partition": f.partition, "num_files": 0,
+                "size_in_bytes": 0, "num_records": 0})
+            p["num_files"] += 1
+            p["size_in_bytes"] += f.file_size_bytes
+            p["num_records"] += f.record_count
+        # bucket values are unpadded numeric STRINGS: a lexical sort
+        # reads '0','1','10','11',...,'2' past 9 buckets
+        rows = [parts[k] for k in sorted(
+            parts, key=lambda k: (k.isdigit(), int(k) if k.isdigit() else 0,
+                                  k))]
         return {"operation": "show_partitions", "table": table.meta.name,
                 "partition_spec": dict(table.meta.partition_spec),
-                "partitions": [r.asDict() for r in rows]}
+                "partitions": rows}
 
     m = re.fullmatch(rf"show\s+create\s+table\s+({_IDENT})", s, re.I)
     if m:

@@ -12,8 +12,8 @@ log (reference: silver streams from bronze inheriting exactly-once,
   micro-batch, so restarts resume exactly where the log position says —
   the engine's own WAL replaces our ledger cursor for this consumer.
 - **A micro-batch's partitions are the files its snapshot range ADDED**
-  (manifest path-set diff against each parent — ``table_source.added_files``
-  algebra), one InputPartition per file: reads scale with the delta and
+  (``format.plan.plan_appends``: the manifest path-set diff against each
+  parent), one InputPartition per file: reads scale with the delta and
   parallelize across executors, never re-reading consumed history.
 - **Row-preserving rewrites are skipped** (``skipRewrites``, default on):
   compaction/clustering snapshots rewrite bytes, not rows (the parity gate
@@ -21,6 +21,10 @@ log (reference: silver streams from bronze inheriting exactly-once,
   exactly Delta's ``skipChangeCommits``. Row-CHANGING operations in the
   interval (merge/replace/overwrite) raise: an append-only delta no longer
   exists and the consumer must recompute (Delta fails these the same way).
+- **The change feed** (``readChangeFeed``) plans with
+  ``format.plan.plan_changes``, the planner ``operators.changelog`` uses:
+  an append's added files stream as inserts, and each row-changing commit
+  is one partition that diffs the commit's added and removed rows.
 
 Executor-side ``read`` is pyarrow (``format.reader``, the same reader
 ``LakeTable.scan`` uses for small reads) and yields Arrow record batches
@@ -28,13 +32,12 @@ cast to the table schema — the vectorized path end to end.
 
 Batch reads additionally take part in FILTER PUSHDOWN
 (``spark.sql.python.filterPushdown.enabled``, pinned on by
-``build_session``): pushed comparison filters become manifest-stats file
-pruning in ``partitions()`` — Spark's pushdown worker calls
-``pushFilters`` and plans partitions on the SAME reader instance, so the
-collected ranges drive the file list; every filter is also returned as
-unsupported so Spark re-applies it row-level above the scan (pruning can
-only skip files whose min/max range cannot match — never a correctness
-dependency).
+``build_session``): ``pushFilters`` turns each pushed filter into a
+``ColumnRange`` and ``partitions()`` plans with ``format.plan.plan_scan``,
+the planner ``LakeTable.scan`` uses — Spark's pushdown worker calls both
+on the SAME reader instance. Every filter is also returned as unsupported
+so Spark re-applies it row-level above the scan (pruning only skips files
+that cannot match — never a correctness dependency).
 """
 
 from __future__ import annotations
@@ -52,8 +55,6 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
-
-ROW_CHANGING_OPS = {"merge", "replace", "overwrite"}
 
 
 @dataclass
@@ -89,62 +90,12 @@ def _load_meta(location: str):
     return meta
 
 
-def _added_paths(location: str, meta, start_id: int, end_id: int,
-                 skip_rewrites: bool) -> list[str]:
-    """Data files a consumer at offset ``start_id`` must read to reach
-    ``end_id``.
-
-    INITIAL LOAD (``start_id == 0``): the LIVE FILES of snapshot ``end``
-    — the table's materialized state, not a log replay. Replaying append
-    snapshots would silently deliver nothing when expire has truncated
-    the pre-maintenance history (the only surviving snapshot being a
-    rewrite), and live-files is also what Delta's readStream delivers as
-    its first batch.
-
-    INCREMENTAL: the parent-chain walk from ``end`` down to ``start``
-    (``table_source.ancestry_interval`` — never a raw id range, which
-    would emit phantom rows from branches abandoned by rollback). Within
-    the chain, appends emit their manifest diff; row-preserving
-    maintenance (rewrite/cluster/compact) is skipped; row-changing ops
-    raise."""
-    from open_finance_lakehouse_spark.streaming.table_source import (
-        ROW_PRESERVING_OPS,
-        NonAppendInterval,
-        added_entries,
-        ancestry_interval,
-    )
-
-    if not start_id:
-        from open_finance_lakehouse_spark.format import manifests as mf
-
-        snap = meta.snapshot(end_id) if end_id else None
-        return [os.path.join(location, e.file_path)
-                for m in (snap.manifests if snap else [])
-                for e in mf.read_manifest(location, m)]
-
-    try:
-        snaps = ancestry_interval(meta, start_id, end_id)
-    except ValueError as e:
-        raise NonAppendInterval(str(e)) from e
-    bad = [s for s in snaps
-           if s.operation != "append"
-           and s.operation not in ROW_PRESERVING_OPS]
-    if bad:
-        raise NonAppendInterval(
-            f"snapshots {[s.snapshot_id for s in bad]} are "
-            f"{sorted({s.operation for s in bad})} — the interval has no "
-            "append-only row delta; recompute the consumer")
-    paths: list[str] = []
-    for s in snaps:
-        if s.operation in ROW_PRESERVING_OPS:
-            if skip_rewrites:
-                continue  # byte-moving, row-preserving: nothing new to emit
-            raise NonAppendInterval(
-                f"snapshot {s.snapshot_id} is a {s.operation} and "
-                "skipRewrites=false")
-        paths.extend(os.path.join(location, e.file_path)
-                     for e in added_entries(location, meta, s))
-    return paths
+def _file_partitions(location: str, files, arrow_schema) -> list:
+    """One partition per planned file; one empty placeholder when the plan
+    is empty (Spark needs at least one)."""
+    return [FrostFilePartition(os.path.join(location, f.file_path),
+                               arrow_schema) for f in files] or \
+        [FrostFilePartition("", arrow_schema)]
 
 
 class FrostStreamReader(DataSourceStreamReader):
@@ -174,12 +125,13 @@ class FrostStreamReader(DataSourceStreamReader):
         return {"snapshot_id": int(meta.current_snapshot_id or 0)}
 
     def partitions(self, start: dict, end: dict):
-        meta = _load_meta(self.location)
-        paths = _added_paths(self.location, meta,
-                             int(start["snapshot_id"]),
-                             int(end["snapshot_id"]), self.skip_rewrites)
-        return [FrostFilePartition(p, self.arrow_schema) for p in paths] or \
-            [FrostFilePartition("", self.arrow_schema)]
+        from open_finance_lakehouse_spark.format.plan import plan_appends
+
+        s = int(start["snapshot_id"])
+        files = plan_appends(_load_meta(self.location), self.location, s,
+                             int(end["snapshot_id"]), self.skip_rewrites,
+                             initial_live_load=not s)
+        return _file_partitions(self.location, files, self.arrow_schema)
 
     def read(self, partition: FrostFilePartition):
         if not partition.path:  # empty micro-batch placeholder
@@ -198,28 +150,21 @@ class FrostStreamReader(DataSourceStreamReader):
 CHANGE_COLS = ("_change_type", "_commit_snapshot_id", "_commit_timestamp_ms")
 CHANGE_COLS_DDL = (", _change_type string, _commit_snapshot_id bigint,"
                    " _commit_timestamp_ms bigint")
-DEFAULT_CHANGE_SHARD_BYTES = 512 * 1024 * 1024
 
 
 @dataclass
 class FrostChangePartition(InputPartition):
-    """One unit of change-feed work.
+    """One unit of change-feed work (``format.plan.ChangeUnit``).
 
-    ``kind="insert"``: one ADDED file of an append commit — reads scale
-    with the delta and parallelize per file, no comparison work.
-    ``kind="diff"``: shard ``shard`` of ``n_shards`` over ONE row-changing
-    commit's touched files (added ∪ removed read together; rows are
-    routed to shards by a deterministic hash of their canonical value
-    tuple, so each task's multiset diff sees every copy of the rows it
-    owns and memory is bounded by touched_bytes / n_shards, not by the
-    commit)."""
+    ``kind="insert"``: one ADDED file of an insert unit — reads scale with
+    the delta and parallelize per file, no comparison work.
+    ``kind="diff"``: one row-changing commit's touched files (added and
+    removed read together for the multiset diff)."""
     kind: str
     added: tuple
     removed: tuple
     snapshot_id: int
     timestamp_ms: int
-    shard: int
-    n_shards: int
     table_schema: object   # pyarrow schema of the requested TABLE columns
     arrow_schema: object   # full requested output schema (incl. change cols)
 
@@ -236,125 +181,41 @@ def _canon_val(v):
     return v
 
 
-def _live_entries(location: str, meta, snapshot_id) -> dict:
-    """path -> file_size_bytes of a snapshot's live files (meta-side)."""
-    from open_finance_lakehouse_spark.format import manifests as mf
-
-    snap = meta.snapshot(snapshot_id) if snapshot_id is not None else None
-    out: dict = {}
-    for m in (snap.manifests if snap else []):
-        for e in mf.read_manifest(location, m):
-            out[e.file_path] = e.file_size_bytes
-    return out
-
-
-def _plan_change_partitions(location: str, meta, start_id, end_id: int,
-                            req_schema, shard_bytes: int,
-                            initial_live_load: bool) -> list:
-    """Driver-side CDC planning over the snapshot log — the exact
-    ancestry/skip algebra of ``operators.changelog.table_changes``, but
-    emitting InputPartitions instead of DataFrame branches. Appends emit
-    one insert partition per added file; row-changing commits emit
-    ⌈touched_bytes / shard_bytes⌉ diff shards; row-preserving maintenance
-    emits nothing and reads nothing. ``initial_live_load`` (stream start
-    from 'beginning'): the END snapshot's LIVE files as inserts — the
-    table's materialized state, the same first batch the plain frost
-    stream (and Delta's readStream) delivers, robust to expired history;
-    batch CDC from genesis replays the log instead (table_changes
-    parity)."""
-    import math
-
+def _change_partitions(location: str, meta, start_id, end_id: int,
+                       req_schema, initial_live_load: bool) -> list:
+    """Driver-side CDC planning: ``format.plan.plan_changes`` (the planner
+    ``operators.changelog.table_changes`` uses too), turned into
+    InputPartitions — one per added file of an insert unit, one per diff
+    unit; an empty plan is one empty placeholder."""
     import pyarrow as pa
 
-    from open_finance_lakehouse_spark.operators.changelog import (
-        _is_row_preserving,
-    )
-    from open_finance_lakehouse_spark.streaming.table_source import (
-        added_entries,
-        ancestry_interval,
-    )
+    from open_finance_lakehouse_spark.format.plan import plan_changes
 
     tschema = pa.schema([f for f in req_schema if f.name not in CHANGE_COLS])
-    parts: list[FrostChangePartition] = []
-
-    def insert_parts(rel_paths, snap):
-        for p in sorted(rel_paths):
-            parts.append(FrostChangePartition(
-                "insert", (os.path.join(location, p),), (),
-                snap.snapshot_id, snap.timestamp_ms, 0, 1,
-                tschema, req_schema))
-
-    if initial_live_load:
-        snap = meta.snapshot(end_id) if end_id else None
-        if snap is not None:
-            insert_parts(_live_entries(location, meta, end_id), snap)
-        return parts
-
-    for snap in ancestry_interval(meta, start_id, end_id):
-        if (snap.summary or {}).get("schema_rewrite") == "true":
-            if parts:
-                # same rule as operators.changelog.table_changes: rows
-                # committed before a rename/drop would be read under the
-                # post-rewrite schema (renamed columns NULL) — refuse
-                raise ValueError(
-                    f"change interval crosses schema rewrite "
-                    f"{snap.snapshot_id}: restart the consumer from that "
-                    "snapshot or later")
-            continue
-        if _is_row_preserving(snap):
-            continue
-        if snap.operation == "append":
-            insert_parts([e.file_path
-                          for e in added_entries(location, meta, snap)],
-                         snap)
-            continue
-        prev = _live_entries(location, meta, snap.parent_id)
-        cur = _live_entries(location, meta, snap.snapshot_id)
-        added = sorted(set(cur) - set(prev))
-        removed = sorted(set(prev) - set(cur))
-        if not added and not removed:
-            continue
-        touched = (sum(cur[p] for p in added)
-                   + sum(prev[p] for p in removed))
-        n_shards = max(1, math.ceil(touched / max(1, shard_bytes)))
-        a_abs = tuple(os.path.join(location, p) for p in added)
-        r_abs = tuple(os.path.join(location, p) for p in removed)
-        for i in range(n_shards):
-            parts.append(FrostChangePartition(
-                "diff", a_abs, r_abs, snap.snapshot_id, snap.timestamp_ms,
-                i, n_shards, tschema, req_schema))
-    return parts
+    parts: list = []
+    for u in plan_changes(meta, location, start_id, end_id,
+                          initial_live_load):
+        added = tuple(os.path.join(location, p) for p in u.added)
+        removed = tuple(os.path.join(location, p) for p in u.removed)
+        groups = [(p,) for p in added] if u.kind == "insert" else [added]
+        parts.extend(FrostChangePartition(
+            u.kind, g, removed, u.snapshot.snapshot_id,
+            u.snapshot.timestamp_ms, tschema, req_schema) for g in groups)
+    return parts or [FrostFilePartition("", req_schema)]
 
 
-def _shard_side(paths, tschema, shard: int, n_shards: int):
-    """Executor-side: read one side of a diff, keep only this shard's rows.
-    Returns (pa.Table of kept rows, aligned canonical keys). Streaming
-    batch-at-a-time: peak memory is the kept shard + one record batch."""
-    import hashlib
-
+def _read_side(paths, tschema):
+    """Executor-side: read one side of a diff. Returns (pa.Table, the
+    aligned canonical row keys)."""
     import pyarrow as pa
 
     names = tschema.names
     pieces, keys = [], []
     for p in paths:
         for batch in _read_file_batches(FrostFilePartition(p, tschema)):
-            rows = batch.to_pylist()
-            if n_shards == 1:
-                keys.extend(tuple(_canon_val(r[n]) for n in names)
-                            for r in rows)
-                pieces.append(batch)
-                continue
-            keep = []
-            for i, r in enumerate(rows):
-                key = tuple(_canon_val(r[n]) for n in names)
-                h = int.from_bytes(
-                    hashlib.blake2b(repr(key).encode(),
-                                    digest_size=8).digest(), "big")
-                if h % n_shards == shard:
-                    keep.append(i)
-                    keys.append(key)
-            if keep:
-                pieces.append(batch.take(pa.array(keep, pa.int64())))
+            keys.extend(tuple(_canon_val(r[n]) for n in names)
+                        for r in batch.to_pylist())
+            pieces.append(batch)
     if pieces:
         return pa.Table.from_batches(pieces, schema=tschema), keys
     empty = pa.table({f.name: pa.nulls(0, f.type) for f in tschema},
@@ -385,7 +246,7 @@ def _read_change_partition(part: FrostChangePartition):
     """Executor-side CDC read (pyarrow + stdlib only).
 
     insert: stream the file's batches stamped 'insert'. diff: exact
-    multiset diff of this shard's rows — surplus occurrences are selected
+    multiset diff of the commit's rows — surplus occurrences are selected
     by INDEX and ``take``n from the original Arrow data, so values pass
     through byte-exact (never rebuilt from Python objects); an update
     surfaces as delete(old)+insert(new), duplicate rows cancel copy for
@@ -394,15 +255,15 @@ def _read_change_partition(part: FrostChangePartition):
 
     import pyarrow as pa
 
+    if not isinstance(part, FrostChangePartition):
+        return  # empty plan placeholder
     if part.kind == "insert":
         for batch in _read_file_batches(
                 FrostFilePartition(part.added[0], part.table_schema)):
             yield from _stamp_batch(batch, "insert", part)
         return
-    atab, akeys = _shard_side(part.added, part.table_schema,
-                              part.shard, part.n_shards)
-    rtab, rkeys = _shard_side(part.removed, part.table_schema,
-                              part.shard, part.n_shards)
+    atab, akeys = _read_side(part.added, part.table_schema)
+    rtab, rkeys = _read_side(part.removed, part.table_schema)
     ca, cr = Counter(akeys), Counter(rkeys)
     for tab, keys, surplus, change in (
             (atab, akeys, ca - cr, "insert"),
@@ -426,25 +287,15 @@ class FrostChangeFeedStreamReader(FrostStreamReader):
     the interval's row-level changes, so row-changing commits no longer
     kill the stream — they arrive as delete+insert pairs."""
 
-    def __init__(self, schema: StructType, location: str,
-                 starting: str | None, shard_bytes: int):
-        super().__init__(schema, location, True, starting)
-        self.shard_bytes = shard_bytes
-
     def partitions(self, start: dict, end: dict):
-        meta = _load_meta(self.location)
-        s, e = int(start["snapshot_id"]), int(end["snapshot_id"])
-        if s == e:
-            return [FrostFilePartition("", self.arrow_schema)]
-        parts = _plan_change_partitions(
-            self.location, meta, s or None, e, self.arrow_schema,
-            self.shard_bytes, initial_live_load=(s == 0))
-        return parts or [FrostFilePartition("", self.arrow_schema)]
+        s = int(start["snapshot_id"])
+        return _change_partitions(
+            self.location, _load_meta(self.location), s or None,
+            int(end["snapshot_id"]), self.arrow_schema,
+            initial_live_load=not s)
 
     def read(self, partition):
-        if isinstance(partition, FrostChangePartition):
-            return _read_change_partition(partition)
-        return iter(())  # empty micro-batch placeholder
+        return _read_change_partition(partition)
 
 
 class FrostChangeFeedBatchReader(DataSourceReader):
@@ -454,30 +305,24 @@ class FrostChangeFeedBatchReader(DataSourceReader):
     ``endingSnapshotId`` (inclusive; default current)."""
 
     def __init__(self, schema: StructType, location: str,
-                 from_id: int | None, to_id: int | None, shard_bytes: int):
+                 from_id: int | None, to_id: int | None):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         self.location = location
         self.from_id = from_id
         self.to_id = to_id
-        self.shard_bytes = shard_bytes
         self.arrow_schema = to_arrow_schema(schema)
 
     def partitions(self):
         meta = _load_meta(self.location)
         end = (self.to_id if self.to_id is not None
-               else meta.current_snapshot_id or 0)
-        if not end:
-            return [FrostFilePartition("", self.arrow_schema)]
-        parts = _plan_change_partitions(
-            self.location, meta, self.from_id, end, self.arrow_schema,
-            self.shard_bytes, initial_live_load=False)
-        return parts or [FrostFilePartition("", self.arrow_schema)]
+               else meta.current_snapshot_id)
+        return _change_partitions(self.location, meta, self.from_id,
+                                  end or None, self.arrow_schema,
+                                  initial_live_load=False)
 
     def read(self, partition):
-        if isinstance(partition, FrostChangePartition):
-            return _read_change_partition(partition)
-        return iter(())
+        return _read_change_partition(partition)
 
 
 class FrostBatchReader(DataSourceReader):
@@ -488,17 +333,16 @@ class FrostBatchReader(DataSourceReader):
         self.location = location
         self.snapshot_id = snapshot_id  # None = current (time travel)
         self.arrow_schema = to_arrow_schema(schema)
-        self._ranges: dict[str, list] = {}  # col -> [lo, hi] (None = open)
-        self._eq: dict[str, set] = {}  # col -> equality/IN value set
-        self._nulls: dict[str, set] = {}  # col -> {"null","notnull"}
+        self._preds: list = []  # pushed filters as ColumnRanges
 
     def pushFilters(self, filters):
-        """Comparison filters on top-level columns become manifest-stats
-        FILE pruning (same ColumnRange algebra as ``LakeTable.scan``).
-        Every filter is returned as unsupported: pruning only skips whole
-        files whose min/max range cannot match — Spark still applies the
-        row-level predicate above the scan, so correctness never depends
-        on the stats."""
+        """Comparison filters on top-level columns become ``ColumnRange``s
+        for ``format.plan.plan_scan``, the planner ``LakeTable.scan`` uses:
+        EqualTo and In prune by value (and by bucket on the bucket column),
+        comparisons by bounds, IsNull/IsNotNull by null counts. Every
+        filter is returned as unsupported: pruning only skips whole files
+        that cannot match — Spark still applies the row-level predicate
+        above the scan, so correctness never depends on the stats."""
         from pyspark.sql.datasource import (
             EqualTo,
             GreaterThan,
@@ -510,122 +354,35 @@ class FrostBatchReader(DataSourceReader):
             LessThanOrEqual,
         )
 
-        import datetime
-
-        from open_finance_lakehouse_spark.format.manifests import (
-            temporal_to_micros,
-        )
-
-        def canon(v):
-            # manifest long stats store temporal values as epoch-micros;
-            # pushed timestamp/date literals arrive as datetime/date and
-            # must be compared in the same domain (an int-vs-datetime
-            # comparison would throw and fail the whole scan)
-            if isinstance(v, (datetime.datetime, datetime.date)):
-                return temporal_to_micros(v)
-            return v
+        from open_finance_lakehouse_spark.format.table import ColumnRange
 
         for f in filters:
             attr = getattr(f, "attribute", None)
             if not attr or len(attr) != 1:
                 continue
             col = attr[0]
-            rng = self._ranges.setdefault(col, [None, None])
-
-            def tighten(lo=None, hi=None):
-                if lo is not None and (rng[0] is None or lo > rng[0]):
-                    rng[0] = lo
-                if hi is not None and (rng[1] is None or hi < rng[1]):
-                    rng[1] = hi
-
-            def narrow_eq(vals: set):
-                # conjunctive across filters: intersect the value sets —
-                # drives BUCKET-VALUE pruning in partitions() when col is
-                # the table's bucket-partition column
-                prev = self._eq.get(col)
-                self._eq[col] = vals if prev is None else prev & vals
-
-            if isinstance(f, EqualTo):
-                tighten(lo=canon(f.value), hi=canon(f.value))
-                if f.value is not None:
-                    narrow_eq({f.value})
-            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                tighten(lo=canon(f.value))
-            elif isinstance(f, (LessThan, LessThanOrEqual)):
-                tighten(hi=canon(f.value))
-            elif isinstance(f, In) and f.value:
-                try:
-                    tighten(lo=canon(min(f.value)), hi=canon(max(f.value)))
-                except TypeError:
-                    pass
-                vals = {v for v in f.value if v is not None}
+            if isinstance(f, (EqualTo, In)):
+                vals = (f.value,) if isinstance(f, EqualTo) else f.value
+                # a NULL literal matches no row: leave it to Spark
+                vals = tuple(v for v in vals if v is not None)
                 if vals:
-                    narrow_eq(vals)
+                    self._preds.append(ColumnRange(col, values=vals))
+            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+                self._preds.append(ColumnRange(col, lo=f.value))
+            elif isinstance(f, (LessThan, LessThanOrEqual)):
+                self._preds.append(ColumnRange(col, hi=f.value))
             elif isinstance(f, (IsNull, IsNotNull)):
-                # manifest null_count pruning: IS NOT NULL skips all-null
-                # files, IS NULL skips zero-null files (conjunctive —
-                # both constraints on one column match no file, which the
-                # contradiction below expresses as an impossible pair)
-                self._nulls.setdefault(col, set()).add(
-                    "null" if isinstance(f, IsNull) else "notnull")
+                self._preds.append(ColumnRange(
+                    col, null_test="null" if isinstance(f, IsNull)
+                    else "notnull"))
         return filters  # all re-applied by Spark post-scan
 
     def partitions(self):
-        from open_finance_lakehouse_spark.format import manifests as mf
-        from open_finance_lakehouse_spark.format.table import ColumnRange
+        from open_finance_lakehouse_spark.format.plan import plan_scan
 
-        meta = _load_meta(self.location)
-        snap = meta.snapshot(self.snapshot_id)
-        preds = [ColumnRange(c, lo=r[0], hi=r[1])
-                 for c, r in self._ranges.items()]
-
-        # bucket-value pruning: equality/IN on the bucket column hashes
-        # each literal to its partition (numpy XXH64 twin — bit-exact with
-        # the routing writer); a point lookup plans 1/num_buckets of the
-        # files before stats even run. Current-snapshot only: a
-        # time-traveled snapshot may predate a partition-spec flip.
-        allowed: set | None = None
-        spec = meta.partition_spec
-        if (spec and spec.get("kind") == "bucket"
-                and (self.snapshot_id is None
-                     or self.snapshot_id == meta.current_snapshot_id)):
-            vals = self._eq.get(spec["column"])
-            if vals is not None:
-                from open_finance_lakehouse_spark.functions.xxh64 import (
-                    buckets_for,
-                )
-                dtype = dict(_ddl_columns(meta.schema_ddl)).get(
-                    spec["column"])
-                allowed = buckets_for(vals, dtype,
-                                      int(spec["num_buckets"]))
-
-        # one truth table for null-count pruning: ColumnRange.matches_nulls
-        # (the same rules plan_files applies for lifted IS [NOT] NULL)
-        null_preds = [ColumnRange(col, null_test=kind)
-                      for col, kinds in self._nulls.items()
-                      for kind in kinds]
-
-        def survives(entry) -> bool:
-            if allowed is not None and entry.partition not in allowed:
-                return False
-            if not all(p.matches_nulls(entry.nulls(p.column),
-                                       entry.record_count)
-                       for p in null_preds):
-                return False
-            try:
-                return all(p.overlaps(entry.bounds(p.column))
-                           for p in preds)
-            except TypeError:
-                return True  # incomparable stat/value domain: never prune
-
-        paths = [
-            os.path.join(self.location, e.file_path)
-            for m in (snap.manifests if snap else [])
-            for e in mf.read_manifest(self.location, m)
-            if survives(e)
-        ]
-        return [FrostFilePartition(p, self.arrow_schema) for p in paths] or \
-            [FrostFilePartition("", self.arrow_schema)]
+        files, _ = plan_scan(_load_meta(self.location), self.location,
+                             self.snapshot_id, self._preds)
+        return _file_partitions(self.location, files, self.arrow_schema)
 
     def read(self, partition: FrostFilePartition):
         if not partition.path:
@@ -655,8 +412,9 @@ class FrostDataSource(DataSource):
     ``startingSnapshotId`` (exclusive; omit = genesis log replay) +
     optional ``endingSnapshotId``. Streaming: same starting options as
     the plain stream; row-changing commits arrive as delete+insert pairs
-    instead of killing the query. ``changeShardBytes`` bounds per-task
-    memory of a row-changing commit's diff (default 512 MiB).
+    instead of killing the query. One partition reads each added file of
+    an append, and one diffs each row-changing commit (the removed
+    ``changeShardBytes`` option refuses).
 
     Delta-compat aliases (frost snapshot ids ARE the table's versions,
     so these are exact synonyms, not approximations): ``startingVersion``
@@ -706,7 +464,9 @@ class FrostDataSource(DataSource):
         replay when N is the first commit); ``'latest'`` means the same
         thing on both sides and passes through.  A version ahead of the
         table or expired from the log refuses loudly (Delta's batch-CDF
-        behavior) instead of guessing a cursor."""
+        behavior) instead of guessing a cursor, and so does a retained
+        version whose parent has expired: the message names the earliest
+        version that works."""
         v = self.options.get("startingSnapshotId")
         a = self.options.get("startingVersion")
         if v is not None and a is not None:
@@ -722,8 +482,8 @@ class FrostDataSource(DataSource):
             return s
         n = int(s)
         meta = _load_meta(self._location())
-        snap = next(
-            (x for x in meta.snapshots if x.snapshot_id == n), None)
+        by_id = {x.snapshot_id: x for x in meta.snapshots}
+        snap = by_id.get(n)
         if snap is None:
             if n > meta.last_snapshot_id:
                 raise ValueError(
@@ -746,15 +506,33 @@ class FrostDataSource(DataSource):
                 "state (omit the option) or from a later version; use "
                 "the BATCH change feed (read, not readStream) for a "
                 "full historical replay")
+        if snap.parent_id is not None and snap.parent_id not in by_id:
+            # version N's delta is its manifests against its parent's:
+            # without the parent it cannot be computed exactly
+            earliest, cur = None, by_id.get(meta.current_snapshot_id)
+            while cur is not None and cur.parent_id in by_id:
+                earliest, cur = cur, by_id[cur.parent_id]
+            hint = (f"the earliest startingVersion that works is "
+                    f"{earliest.snapshot_id}" if earliest is not None
+                    else "only startingVersion='latest' works")
+            raise ValueError(
+                f"startingVersion={n}: its parent snapshot {snap.parent_id} "
+                f"has been expired from the log, and version {n}'s changes "
+                f"are computed against it — {hint}")
         return str(snap.parent_id if snap.parent_id is not None else 0)
 
     def _cdc(self) -> bool:
+        self._check_removed_options()
         return (str(self.options.get("readChangeFeed", "false")).lower()
                 in ("true", "1", "yes"))
 
-    def _change_shard_bytes(self) -> int:
-        return int(self.options.get("changeShardBytes",
-                                    DEFAULT_CHANGE_SHARD_BYTES))
+    def _check_removed_options(self) -> None:
+        if self.options.get("changeShardBytes") is not None:
+            # one diff partition now covers one row-changing commit; a
+            # caller relying on the old per-task memory bound must know
+            raise ValueError(
+                "the changeShardBytes option was removed: a change feed "
+                "diffs each row-changing commit in one partition")
 
     def _snapshot_id(self) -> int | None:
         sid = self._opt("snapshotId", "versionAsOf")
@@ -807,8 +585,7 @@ class FrostDataSource(DataSource):
             return FrostChangeFeedBatchReader(
                 schema, self._location(),
                 int(start) if start is not None else None,
-                int(end) if end is not None else None,
-                self._change_shard_bytes())
+                int(end) if end is not None else None)
         return FrostBatchReader(schema, self._location(),
                                 self._snapshot_id())
 
@@ -817,8 +594,7 @@ class FrostDataSource(DataSource):
         starting = self._resolve_starting()
         if self._cdc():
             return FrostChangeFeedStreamReader(
-                schema, self._location(), starting,
-                self._change_shard_bytes())
+                schema, self._location(), True, starting)
         return FrostStreamReader(schema, self._location(), skip, starting)
 
     def _resolve_starting(self) -> str | None:

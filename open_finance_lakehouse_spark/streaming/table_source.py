@@ -29,48 +29,16 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from open_finance_lakehouse_spark.format import manifests as mf
+from open_finance_lakehouse_spark.format import plan
 from open_finance_lakehouse_spark.format.metadata import Snapshot
+from open_finance_lakehouse_spark.format.plan import NonAppendInterval
 from open_finance_lakehouse_spark.format.table import LakeTable
+from open_finance_lakehouse_spark.operators.changelog import table_changes
 from open_finance_lakehouse_spark.plans.ledger import (
     STATUS_COMMITTED,
     CheckpointLedger,
     CheckpointRecord,
 )
-
-
-class NonAppendInterval(Exception):
-    """A non-append snapshot sits between the cursor and the head — the
-    interval has no pure row-delta; consumers must recompute fully."""
-
-
-def ancestry_interval(meta, start_id: int | None, end_id: int | None
-                      ) -> list[Snapshot]:
-    """Snapshots on the CURRENT ancestry chain in (start, end], oldest
-    first — the parent-chain walk, NOT a raw id range: snapshots on a
-    branch abandoned by rollback stay in the log until expire, and an
-    id-range scan would deliver their rows as if committed (phantom
-    reads). Raises when the start cursor is not an ancestor of ``end``
-    (expired from the log, or a rollback crossed it) — refusing loudly
-    beats silently skipping whatever history was dropped."""
-    if end_id is None or end_id == start_id:
-        return []
-    by_id = {s.snapshot_id: s for s in meta.snapshots}
-    chain: list[Snapshot] = []
-    cur = end_id
-    while cur is not None and cur != start_id:
-        snap = by_id.get(cur)
-        if snap is None:
-            raise ValueError(
-                f"snapshot {cur} missing from the log while walking "
-                f"{end_id} -> {start_id}: the cursor expired or a rollback "
-                "crossed it — retention must exceed the consumer lag")
-        chain.append(snap)
-        cur = snap.parent_id
-    if cur != start_id and not (cur is None and not start_id):
-        raise ValueError(
-            f"cursor snapshot {start_id} is not an ancestor of {end_id}")
-    return list(reversed(chain))
 
 
 def snapshots_since(table: LakeTable, since_snapshot_id: int | None
@@ -83,45 +51,8 @@ def snapshots_since(table: LakeTable, since_snapshot_id: int | None
         raise ValueError(
             f"cursor snapshot {since_snapshot_id} expired from the log — "
             "the retention window must exceed the consumer lag")
-    return ancestry_interval(table.meta, since_snapshot_id,
-                             table.meta.current_snapshot_id)
-
-
-def added_entries(location: str, meta, snap: Snapshot) -> list[mf.DataFile]:
-    """Files a snapshot added = entries of manifests not in its parent.
-    Manifests are immutable and reused by path across commits, so the
-    path-set diff is exact. (Shared by the ledger-cursor consumer and the
-    ``format("frost")`` streaming source.)"""
-    parent = next((s for s in meta.snapshots
-                   if s.snapshot_id == snap.parent_id), None)
-    if snap.parent_id is not None and parent is None:
-        # the parent expired while this child stayed retained (expire
-        # keeps the last K chain ancestors): with no parent manifests to
-        # diff against, EVERY manifest would read as 'added' and the
-        # consumer would silently re-deliver the whole table state —
-        # the worst failure a changelog can have. Refuse loudly.
-        raise ValueError(
-            f"snapshot {snap.snapshot_id}'s parent {snap.parent_id} has "
-            "been expired from the log — the added-files diff cannot be "
-            "computed exactly; the retention window must exceed the "
-            "consumer lag")
-    parent_manifests = set(parent.manifests) if parent else set()
-    out: list[mf.DataFile] = []
-    for m in snap.manifests:
-        if m not in parent_manifests:
-            out.extend(mf.read_manifest(location, m))
-    return out
-
-
-def added_files(table: LakeTable, snap: Snapshot) -> list[mf.DataFile]:
-    return added_entries(table.location, table.meta, snap)
-
-
-# byte-moving, row-preserving maintenance operations: their added files
-# carry only rows an incremental consumer has already seen (parity-gated),
-# so the delta scan SKIPS them — maintenance on the source table no longer
-# interrupts its consumers (mirrors format("frost")'s skipRewrites)
-ROW_PRESERVING_OPS = {"rewrite", "cluster", "compact"}
+    return plan.ancestry_interval(table.meta, since_snapshot_id,
+                                  table.meta.current_snapshot_id)
 
 
 def incremental_scan(
@@ -136,21 +67,14 @@ def incremental_scan(
     head = table.current_snapshot_id()
     if head == since_snapshot_id:
         return table._empty_df(), since_snapshot_id, {"files": 0, "snapshots": 0}
-    delta = snapshots_since(table, since_snapshot_id)
-    bad = [s for s in delta
-           if s.operation != "append"
-           and s.operation not in ROW_PRESERVING_OPS]
-    if bad:
-        raise NonAppendInterval(
-            f"snapshots {[s.snapshot_id for s in bad]} are "
-            f"{sorted({s.operation for s in bad})}, not append")
-    files = [f for s in delta if s.operation == "append"
-             for f in added_files(table, s)]
+    n_snaps = len(snapshots_since(table, since_snapshot_id))
+    files = plan.plan_appends(table.meta, table.location, since_snapshot_id,
+                              head)
     if not files:
-        return table._empty_df(), head, {"files": 0, "snapshots": len(delta)}
+        return table._empty_df(), head, {"files": 0, "snapshots": n_snaps}
     paths = [os.path.join(table.location, f.file_path) for f in files]
     df = table.spark.read.schema(table.schema()).parquet(*paths)
-    return df, head, {"files": len(files), "snapshots": len(delta),
+    return df, head, {"files": len(files), "snapshots": n_snaps,
                       "records": sum(f.record_count for f in files)}
 
 
@@ -165,12 +89,6 @@ def incremental_changes(
     whose cost is bounded by the files those commits touched. Consumers
     that only need the affected-group keys may project the table columns
     and treat inserts and deletes alike (both mark a group dirty)."""
-    # local import: changelog imports this module's ancestry helpers
-    from open_finance_lakehouse_spark.operators.changelog import (
-        _is_row_preserving,
-        table_changes,
-    )
-
     table.refresh()
     head = table.current_snapshot_id()
 
@@ -180,7 +98,8 @@ def incremental_changes(
     if head == since_snapshot_id:
         return empty(), since_snapshot_id, {"files": 0, "snapshots": 0}
     delta = snapshots_since(table, since_snapshot_id)
-    changed = [s for s in delta if not _is_row_preserving(s)]
+    changed = [s for s in delta
+               if plan.commit_kind(s) in (plan.APPEND, plan.CHANGE)]
     n_files = 0
     for s in changed:
         # the count is informational — take it from the commit summary
@@ -193,7 +112,7 @@ def incremental_changes(
             n_files += (int(summ.get("added_files", 0))
                         + int(summ.get("removed_files", 0)))
         elif s.operation == "append":
-            n_files += len(added_files(table, s))
+            n_files += len(plan.added_entries(table.meta, table.location, s))
         else:
             prev = ({f.file_path for f in table.live_files(s.parent_id)}
                     if s.parent_id is not None else set())

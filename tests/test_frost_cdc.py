@@ -121,17 +121,6 @@ def test_batch_cdc_interval_merge_surfaces_delete_insert(spark, history):
     got.unpersist()
 
 
-def test_batch_cdc_sharded_diff_is_exact(spark, history):
-    """changeShardBytes small enough to force many diff shards per commit:
-    the sharded multiset diff must reproduce the unsharded feed exactly
-    (rows route to shards by value hash, every copy of a row lands in one
-    shard, surpluses are taken from the original Arrow data)."""
-    t, snaps = history
-    plain = _cdc_read(spark, t, start=snaps[2])
-    sharded = _cdc_read(spark, t, start=snaps[2], changeShardBytes="256")
-    assert _multiset_equal(plain, sharded)
-
-
 def test_batch_cdc_ending_snapshot_bounds_the_interval(spark, history):
     t, snaps = history
     got = _cdc_read(spark, t, start=snaps[1], end=snaps[2])
@@ -193,8 +182,7 @@ def test_cdc_multiset_gauntlet(spark, tmp_path):
     COPY FOR COPY (removing one of two identical rows is exactly one
     delete), an identity replace emits nothing, and consecutive
     row-changing commits each stamp their own changes — asserted for the
-    unsharded path, a forced many-shard path, and the table_changes
-    oracle, which must all agree."""
+    frost change feed and the table_changes oracle, which must agree."""
     register_frost_source(spark)
     t = LakeTable.create(spark, str(tmp_path / "g"), "g", "k int, v string")
     rows = lambda data: spark.createDataFrame(data, "k int, v string")  # noqa: E731
@@ -206,11 +194,7 @@ def test_cdc_multiset_gauntlet(spark, tmp_path):
     s4 = t.current_snapshot_id()
 
     oracle = cl.table_changes(t, s1, s4)
-    # shard size chosen to force a handful of shards per commit (not one
-    # per byte — thousands of micro-tasks would dominate the test's time)
-    for opts in ({}, {"changeShardBytes": "400"}):
-        got = _cdc_read(spark, t, start=s1, end=s4, **opts)
-        assert _multiset_equal(got, oracle), f"diverged with {opts}"
+    assert _multiset_equal(_cdc_read(spark, t, start=s1, end=s4), oracle)
     per = {(r["k"], r["v"], r[cl.CHANGE_TYPE_COL]): r["n"]
            for r in oracle.groupBy("k", "v", cl.CHANGE_TYPE_COL)
            .agg(F.count("*").alias("n")).collect()}
@@ -339,3 +323,119 @@ def test_cdc_option_validation_survives_user_schema(spark, history):
          .option("location", t.location)
          .option("readChangeFeed", "true")
          .option("snapshotId", snaps[2]).load()).collect()
+
+
+def _stream_cdc(spark, t, start, path):
+    """Drain a change-feed stream from cursor ``start`` to the head."""
+    out, ckpt = str(path / "out"), str(path / "ckpt")
+    q = (spark.readStream.format("frost").option("location", t.location)
+         .option("readChangeFeed", "true")
+         .option("startingSnapshotId", start).load()
+         .writeStream.outputMode("append").format("parquet")
+         .option("path", out).option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    if q.exception() is not None:
+        raise q.exception()
+    return spark.read.parquet(out)
+
+
+def _assert_feeds_agree(spark, t, start, path):
+    """The batch change feed, the streamed change feed and table_changes
+    return one multiset over (start, head]."""
+    oracle = cl.table_changes(t, start)
+    batch = _cdc_read(spark, t, start=start)
+    stream = _stream_cdc(spark, t, start, path)
+    assert oracle.count() > 0
+    assert _multiset_equal(batch, oracle)
+    assert _multiset_equal(stream.select(oracle.columns), oracle)
+
+
+def test_change_feeds_agree_on_history(spark, history, tmp_path):
+    """Appends, a MERGE (updates, deletes, inserts) and a compaction."""
+    t, snaps = history
+    _assert_feeds_agree(spark, t, snaps[1], tmp_path)
+
+
+def test_change_feeds_agree_on_duplicates_and_nan(spark, tmp_path):
+    """Duplicate rows cancel copy for copy and NaN equals NaN in all three
+    diffs (Spark's exceptAll and the Arrow multiset diff)."""
+    register_frost_source(spark)
+    t = LakeTable.create(spark, str(tmp_path / "dn"), "dn",
+                         "k int, v double, s string")
+    nan = float("nan")
+    rows = lambda data: spark.createDataFrame(  # noqa: E731
+        data, "k int, v double, s string")
+    t.append(rows([(0, 0.0, "z")]))
+    s0 = t.current_snapshot_id()
+    t.append(rows([(1, nan, "a"), (1, nan, "a"), (2, 2.0, None)]))
+    t.replace(rows([(1, nan, "a"), (2, 2.0, None), (3, nan, "c")]))
+    t.replace(rows([(1, nan, "a"), (2, 2.0, None), (3, nan, "c")]))
+    t.replace(rows([(2, -0.5, None), (3, nan, "c"), (3, nan, "c")]))
+    _assert_feeds_agree(spark, t, s0, tmp_path)
+    per = {(r["k"], r[cl.CHANGE_TYPE_COL]): r["n"] for r in
+           cl.table_changes(t, s0).groupBy("k", cl.CHANGE_TYPE_COL)
+           .agg(F.count("*").alias("n")).collect()}
+    assert per == {(1, cl.INSERT): 2, (2, cl.INSERT): 2, (3, cl.INSERT): 2,
+                   (1, cl.DELETE): 2, (2, cl.DELETE): 1, (0, cl.DELETE): 1}
+
+
+def test_change_shard_bytes_option_refuses(spark, history):
+    """The removed diff-sharding option refuses instead of being ignored,
+    so a caller who relied on its memory bound finds out."""
+    t, snaps = history
+    with pytest.raises(Exception, match="changeShardBytes option was removed"):
+        _cdc_read(spark, t, start=snaps[2],
+                  changeShardBytes="256").collect()
+
+
+def test_schema_rewrite_outcomes_per_consumer(spark, tmp_path):
+    """One commit classification, each consumer's rule on a rewrite_schema
+    commit: append-only consumers (the plain stream, incremental_scan)
+    refuse; the change feeds skip it when it opens the interval and refuse
+    when rows precede it."""
+    from open_finance_lakehouse_spark.streaming.table_source import (
+        NonAppendInterval,
+        incremental_scan,
+    )
+
+    register_frost_source(spark)
+    t = LakeTable.create(spark, str(tmp_path / "sr"), "sr",
+                         "k BIGINT, old_name STRING")
+    t.append(spark.createDataFrame([(1, "a")], "k BIGINT, old_name STRING"))
+    s1 = t.current_snapshot_id()
+    t.append(spark.createDataFrame([(2, "b")], "k BIGINT, old_name STRING"))
+    s2 = t.current_snapshot_id()
+    t.rewrite_schema("k BIGINT, new_name STRING",
+                     mapping={"new_name": "old_name"})
+    t.append(spark.createDataFrame([(3, "c")], "k BIGINT, new_name STRING"))
+
+    # append-only consumers refuse whether or not rows precede the rewrite
+    for start in (s1, s2):
+        with pytest.raises(NonAppendInterval):
+            incremental_scan(t, start)
+        out, ckpt = tmp_path / f"p{start}", tmp_path / f"c{start}"
+        q = (spark.readStream.format("frost").option("location", t.location)
+             .option("startingSnapshotId", start).load()
+             .writeStream.outputMode("append").format("parquet")
+             .option("path", str(out))
+             .option("checkpointLocation", str(ckpt))
+             .trigger(availableNow=True).start())
+        with pytest.raises(Exception, match="append-only row delta"):
+            q.awaitTermination(120)
+            if q.exception() is not None:
+                raise q.exception()
+
+    # change feeds: rows (s2's append) precede the rewrite -> refuse
+    with pytest.raises(ValueError, match="schema rewrite"):
+        cl.table_changes(t, s1)
+    with pytest.raises(Exception, match="schema rewrite"):
+        _cdc_read(spark, t, start=s1).collect()
+    with pytest.raises(Exception, match="schema rewrite"):
+        _stream_cdc(spark, t, s1, tmp_path / "cs1")
+    # the rewrite opens the interval -> skipped, later rows flow
+    want = [(3, "c", cl.INSERT)]
+    for got in (cl.table_changes(t, s2), _cdc_read(spark, t, start=s2),
+                _stream_cdc(spark, t, s2, tmp_path / "cs2")):
+        assert [(r["k"], r["new_name"], r[cl.CHANGE_TYPE_COL])
+                for r in got.collect()] == want

@@ -827,3 +827,102 @@ def test_build_session_registers_frost_out_of_the_box(tmp_path):
                        text=True, timeout=300, env=env, cwd=str(tmp_path))
     assert r.returncode == 0, r.stderr[-2000:]
     assert "COUNT= 3" in r.stdout
+
+
+def test_frost_pushdown_plans_like_plan_files(spark, tmp_path):
+    """The frost batch reader and ``LakeTable.plan_files`` plan through one
+    planner: each pushed filter becomes the ColumnRange a scan would take,
+    and the reader's partitions are exactly the files ``plan_files``
+    selects — ranges, EqualTo/In on the bucket column, IS [NOT] NULL, a
+    temporal bound, and a time-travelled snapshot."""
+    import datetime
+
+    from pyspark.sql.datasource import (
+        EqualTo,
+        GreaterThan,
+        GreaterThanOrEqual,
+        In,
+        IsNotNull,
+        IsNull,
+        LessThanOrEqual,
+    )
+
+    from open_finance_lakehouse_spark.format.table import ColumnRange
+    from open_finance_lakehouse_spark.streaming.frost_source import (
+        FrostBatchReader,
+    )
+
+    register_frost_source(spark)
+    t = LakeTable.create(
+        spark, str(tmp_path / "eq"), "eq",
+        "k BIGINT, cat STRING, v DOUBLE, ts TIMESTAMP",
+        partition_spec={"kind": "bucket", "column": "cat",
+                        "num_buckets": 8})
+    base = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    for i in range(3):  # disjoint k and ts ranges; v all-null in append 1
+        t.append(spark.range(i * 100, i * 100 + 100).select(
+            F.col("id").alias("k"),
+            F.concat(F.lit("c"), F.pmod("id", F.lit(10))).alias("cat"),
+            (F.when(F.lit(i != 1), F.col("id") * 1.0)).alias("v"),
+            F.lit(base + datetime.timedelta(days=i)).alias("ts")))
+        if i == 0:
+            s_old = t.current_snapshot_id()
+    cutoff = base + datetime.timedelta(hours=12)
+    cases = [
+        (None, [GreaterThanOrEqual(("k",), 150), LessThanOrEqual(("k",), 160)],
+         [ColumnRange("k", lo=150), ColumnRange("k", hi=160)]),
+        (None, [EqualTo(("cat",), "c7")],
+         [ColumnRange("cat", values=("c7",))]),
+        (None, [In(("cat",), ("c7", "c3"))],
+         [ColumnRange("cat", values=("c7", "c3"))]),
+        (None, [IsNull(("v",))], [ColumnRange("v", null_test="null")]),
+        (None, [IsNotNull(("v",))], [ColumnRange("v", null_test="notnull")]),
+        (None, [GreaterThan(("ts",), cutoff)], [ColumnRange("ts", lo=cutoff)]),
+        (s_old, [EqualTo(("cat",), "c7")],
+         [ColumnRange("cat", values=("c7",))]),
+    ]
+    n_live = len(t.live_files())
+    for sid, filters, ranges in cases:
+        rd = FrostBatchReader(t.schema(sid), t.location, sid)
+        rd.pushFilters(filters)
+        assert rd._preds == ranges
+        got = {p.path for p in rd.partitions()}
+        want, total = t.plan_files(sid, ranges)
+        assert got == {os.path.join(t.location, f.file_path) for f in want}
+        if sid is None:
+            assert 0 < len(want) < total == n_live, (filters, len(want))
+
+
+def test_frost_starting_version_with_expired_parent_refuses(spark, bronze):
+    """startingVersion=N is retained but N's parent has expired: N's
+    changes are computed against the parent's manifests, so the stream and
+    the change feed refuse at option resolution, naming the expired parent
+    and the earliest version that works — not later, with a generic
+    ancestry-walk error."""
+    from open_finance_lakehouse_spark.streaming.frost_source import (
+        FrostDataSource,
+    )
+
+    for i in range(4):
+        bronze.append(_rows(spark, [_event("BTC", i, BASE_MS + i * 1000)]))
+    bronze.expire_snapshots(retain_last=2)
+    bronze.refresh()
+    oldest, newest = sorted(s.snapshot_id for s in bronze.meta.snapshots)
+    parent = bronze.meta.snapshot(oldest).parent_id
+    schema = bronze.schema()
+    for opts in ({}, {"readChangeFeed": "true"}):
+        ds = FrostDataSource({"location": bronze.location,
+                              "startingVersion": str(oldest), **opts})
+        with pytest.raises(ValueError, match=(
+                rf"parent snapshot {parent} has been expired.*"
+                rf"earliest startingVersion that works is {newest}")):
+            ds.streamReader(schema)
+    ds = FrostDataSource({"location": bronze.location,
+                          "startingVersion": str(oldest),
+                          "readChangeFeed": "true"})
+    with pytest.raises(ValueError, match="earliest startingVersion"):
+        ds.reader(schema)
+    # the named version works
+    ok = FrostDataSource({"location": bronze.location,
+                          "startingVersion": str(newest)})
+    ok.streamReader(schema)

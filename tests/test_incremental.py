@@ -412,9 +412,7 @@ def test_added_entries_refuses_expired_parent(spark, tmp_path):
     parent can be gone from the log — the added-files diff would then
     treat EVERY manifest as new and silently re-deliver the whole table.
     Must refuse loudly instead."""
-    from open_finance_lakehouse_spark.streaming.table_source import (
-        added_entries,
-    )
+    from open_finance_lakehouse_spark.format.plan import added_entries
 
     t = LakeTable.create(spark, str(tmp_path / "exp"), "exp",
                          "k long, v double")
@@ -425,7 +423,7 @@ def test_added_entries_refuses_expired_parent(spark, tmp_path):
     oldest_kept = min(t.meta.snapshots, key=lambda s: s.snapshot_id)
     assert oldest_kept.parent_id is not None  # parent expired, child kept
     with pytest.raises(ValueError, match="expired from the log"):
-        added_entries(t.location, t.meta, oldest_kept)
+        added_entries(t.meta, t.location, oldest_kept)
 
 
 def test_commit_replace_txn_fence_inside_cas(spark, tmp_path):

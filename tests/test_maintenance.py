@@ -815,9 +815,9 @@ def test_compact_is_one_write_job_and_one_snapshot(spark, tmp_path):
     assert rows() == before
 
 
-def test_distributed_orphan_gc(spark, tmp_path):
-    """GC through the Spark-side path: distributed listing + anti-join
-    collects a planted orphan, spares live files and graced fresh files."""
+def test_orphan_gc_collects_plant_and_honours_grace(spark, tmp_path):
+    """GC (the driver-side walk) collects a planted orphan, spares live
+    files and graced fresh files."""
     t = LakeTable.create(
         spark, str(tmp_path / "clips_gc"), "clips_gc", CLIP_SCHEMA_DDL,
         partition_spec={"kind": "bucket", "column": "clip_id",
@@ -827,10 +827,10 @@ def test_distributed_orphan_gc(spark, tmp_path):
     orphan = os.path.join(t.location, "data", "part=0", "orphan.parquet")
     with open(orphan, "wb") as f:
         f.write(b"junk")
-    # grace window protects the fresh plant through the distributed path
-    assert t.delete_orphans(grace_ms=60_000, distributed=True) == []
+    # the grace window protects the fresh plant
+    assert t.delete_orphans(grace_ms=60_000) == []
     assert os.path.exists(orphan)
-    victims = t.delete_orphans(grace_ms=0, distributed=True)
+    victims = t.delete_orphans(grace_ms=0)
     assert victims == [os.path.join("data", "part=0", "orphan.parquet")]
     assert not os.path.exists(orphan)
     for f_ in t.live_files():
@@ -1104,17 +1104,16 @@ def test_cluster_global_survives_concurrent_append(spark, tmp_path,
 
 
 def test_live_file_count_exact_after_expire(spark, tmp_path):
-    """live_file_count (manifest footers) stays exact when expire drops
-    the append snapshots whose summaries the old estimate summed — the
-    input to the merge-broadcast and distributed-GC switches."""
+    """The live file inventory stays exact when expire drops the append
+    snapshots whose summaries a sum of ``added_files`` would count."""
     t = LakeTable.create(spark, str(tmp_path / "lfc"), "lfc",
                          "k BIGINT, v DOUBLE")
     for lo in range(0, 300, 100):
         t.append(spark.range(lo, lo + 100).coalesce(1).select(
             F.col("id").alias("k"), (F.col("id") * 1.0).alias("v")))
-    assert t.live_file_count() == 3
+    assert len(t.live_files()) == 3
     t.expire_snapshots(retain_last=1)
-    assert t.live_file_count() == len(t.live_files()) == 3
+    assert len(t.live_files()) == 3
 
 
 def test_ledger_dfs_tolerate_empty_dirs(spark, tmp_path):

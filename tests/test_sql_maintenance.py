@@ -384,9 +384,8 @@ def test_show_partitions_orders_buckets_numerically(spark, tmp_path):
 
 
 def test_show_partitions_inventory(spark, tmp_path):
-    """SHOW PARTITIONS returns the per-bucket inventory as ONE grouped
-    aggregate over the manifest relation (O(partitions) driver rows) and
-    refuses on unpartitioned tables."""
+    """SHOW PARTITIONS returns the per-bucket inventory, grouped from
+    ``live_files()`` on the driver, and refuses on unpartitioned tables."""
     t = _table(spark, tmp_path, "msp", n=40)
     res = run_maintenance_sql(spark, "SHOW PARTITIONS msp", {"msp": t})
     assert res["operation"] == "show_partitions"

@@ -381,15 +381,15 @@ def test_snapshot_ids_unique_for_table_lifetime(spark, warehouse):
     assert s4.snapshot_id > s3.snapshot_id
 
 
-def test_distributed_gc_tolerates_stray_file_under_data(spark, warehouse):
+def test_gc_collects_stray_file_under_data(spark, warehouse):
     """A stray regular file directly under data/ (not in a part= dir) must
-    not crash the distributed lister — and, being unreachable, is GC'd."""
+    not crash the orphan walk — and, being unreachable, is GC'd."""
     t = make_table(spark, warehouse, name="stray")
     t.append(kdf(spark, 0, 10))
     stray = os.path.join(t.location, "data", "stray.bin")
     with open(stray, "wb") as f:
         f.write(b"junk")
-    victims = t.delete_orphans(distributed=True)
+    victims = t.delete_orphans()
     assert os.path.join("data", "stray.bin") in victims
     assert not os.path.exists(stray)
     assert t.scan().count() == 10
@@ -833,6 +833,28 @@ def test_bucket_value_pruning_point_lookup(spark, warehouse):
     assert len(sel_bad) == total
 
 
+def test_bucket_value_pruning_resolves_ddl_aliases(spark, warehouse):
+    """The bucket column's type comes from the table DDL: a table declared
+    with ``long``/``integer`` prunes to the same buckets as one declared
+    with ``bigint``/``int``."""
+    picked = {}
+    for name, ddl in (("canon", "k BIGINT, n INT"),
+                      ("alias", "k LONG, n INTEGER")):
+        for col in ("k", "n"):
+            t = LakeTable.create(
+                spark, os.path.join(warehouse, f"{name}_{col}"), name, ddl,
+                partition_spec={"kind": "bucket", "column": col,
+                                "num_buckets": 8})
+            t.append(spark.range(0, 64).selectExpr(
+                "id AS k", "CAST(id AS INT) AS n"))
+            sel, total = t.plan_files(
+                predicates=[ColumnRange(col, values=(5, 42))])
+            assert len(sel) < total
+            picked[name, col] = sorted(f.partition for f in sel)
+    assert picked["canon", "k"] == picked["alias", "k"]
+    assert picked["canon", "n"] == picked["alias", "n"]
+
+
 def test_bucket_value_pruning_skips_time_travel(spark, warehouse):
     """Bucket-value pruning is CURRENT-snapshot only: files in a snapshot
     that predates a partition-spec flip were routed under the OLD spec, so
@@ -1086,7 +1108,7 @@ def test_gc_sweeps_dead_staging_and_tolerates_lost_unlink_race(
     monkeypatch.setattr(
         LakeTable, "_find_orphans_walk",
         lambda self, *a, **k: ["data/ghost.parquet"])
-    t.delete_orphans(grace_ms=60_000, distributed=False)  # must not raise
+    t.delete_orphans(grace_ms=60_000)  # must not raise
     assert not os.path.exists(os.path.join(base, "deadjob"))
     assert os.path.exists(os.path.join(base, "livejob"))
     assert t.refresh().scan().count() == 10
@@ -1105,7 +1127,7 @@ def test_gc_at_zero_grace_keeps_a_running_writers_staging(spark, warehouse):
     for name, age_s in (("running", 5 * 60), ("corpse", 2 * 3600)):
         os.makedirs(os.path.join(base, name))
         os.utime(os.path.join(base, name), (now - age_s, now - age_s))
-    t.delete_orphans(grace_ms=0, distributed=False)
+    t.delete_orphans(grace_ms=0)
     assert os.path.exists(os.path.join(base, "running"))
     assert not os.path.exists(os.path.join(base, "corpse"))
     assert t.refresh().scan().count() == 10
